@@ -156,20 +156,26 @@ object CdxIndex {
           var offset = 0L
           var seq = 0
           val rows = try {
-            it.grouped(blockLines).map { blk =>
-              val bos = new java.io.ByteArrayOutputStream()
-              val gz = new java.util.zip.GZIPOutputStream(bos)
-              gz.write((blk.mkString("\n") + "\n").getBytes("UTF-8"))
-              gz.finish(); gz.close()
-              val bytes = bos.toByteArray
-              out.write(bytes)
-              val fields = blk.head.split(" ", 3)
-              val row = (fields(0), fields(1), shard, offset, bytes.length.toLong, seq)
-              offset += bytes.length
-              seq += 1
-              row
-            }.toVector // drain before closing the shard stream
-          } finally out.close()
+            try {
+              it.grouped(blockLines).map { blk =>
+                val bos = new java.io.ByteArrayOutputStream()
+                val gz = new java.util.zip.GZIPOutputStream(bos)
+                gz.write((blk.mkString("\n") + "\n").getBytes("UTF-8"))
+                gz.finish(); gz.close()
+                val bytes = bos.toByteArray
+                out.write(bytes)
+                val fields = blk.head.split(" ", 3)
+                val row = (fields(0), fields(1), shard, offset, bytes.length.toLong, seq)
+                offset += bytes.length
+                seq += 1
+                row
+              }.toVector // drain before closing the shard stream
+            } finally out.close()
+          } catch { case e: Throwable =>
+            // a failed attempt leaves no partial shard behind
+            java.nio.file.Files.deleteIfExists(tmp)
+            throw e
+          }
           java.nio.file.Files.move(tmp, path,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)

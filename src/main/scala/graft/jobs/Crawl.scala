@@ -144,14 +144,6 @@ object Crawl {
       store.get.read(spark, "filters").map(df => FilterTable(df, cfg.numShards))
     }
 
-    val timing = sys.env.contains("GRAFT_TIMING")
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (timing) {
-      val t = System.nanoTime()
-      println(f"[timing] $label: ${(t - t0) / 1e9}%.2f s")
-      t0 = t
-    }
-
     val stats = scala.collection.mutable.Buffer[RoundStats]()
     var allWarc: Option[DataFrame] = store.flatMap(_.read(spark, "warc_rows"))
     var totalScheduled = resumed.map(_.counts.getOrElse("total_scheduled", 0L)).getOrElse(0L)
@@ -166,7 +158,6 @@ object Crawl {
         robots, Scheduler.Config(cfg.perHostBudget, cfg.maxPerRound, cfg.numSlots, salt = round))
       val scheduled =
         if (cfg.checkpointState) scheduledPlan.localCheckpoint() else scheduledPlan.cache()
-      lap(s"r$round schedule+checkpoint")
       // With cfg.concurrentJobs, independent per-round jobs are SUBMITTED
       // CONCURRENTLY (Spark's scheduler interleaves their stages), hiding
       // per-job planning + scheduling latency — the driver-serial fraction
@@ -198,7 +189,6 @@ object Crawl {
         case r if r.isNullAt(0) => 0L
         case r => r.getLong(0)
       }
-      lap(s"r$round filters+count")
 
       if (nScheduled == 0) {
         fetchedF.foreach(f => Await.result(f, Duration.Inf).unpersist(blocking = false))
@@ -206,7 +196,6 @@ object Crawl {
         continue = false
       } else {
         val fetched = fetchedF.map(Await.result(_, Duration.Inf)).getOrElse(doFetch())
-        lap(s"r$round fetch+checkpoint")
         val doStats = cfg.collectStats || store.nonEmpty
         // metrics ride the materialization itself: Dataset.observe attaches
         // a CollectMetrics node, so the checkpoint that materializes the
@@ -225,7 +214,6 @@ object Crawl {
           else warcPlan0
         val warc = if (cfg.checkpointState) warcPlan.localCheckpoint() else warcPlan.cache()
         if (!cfg.checkpointState && doStats) warc.count() // cache() alone defers the action
-        lap(s"r$round warc+checkpoint")
         val newDigests = Fetch.newDigestEntries(warc, fcfg)
         val links = Fetch.outlinks(fetched, fcfg)
 
@@ -269,7 +257,6 @@ object Crawl {
           scheduled.unpersist(blocking = false)
           fetched.unpersist(blocking = false)
         }
-        lap(s"r$round state checkpoints")
         totalScheduled += nScheduled
         allWarc = Some(allWarc.map(_.unionByName(warc)).getOrElse(warc))
         val nLinks = if (doStats) frontier.count() else -1L

@@ -1,166 +1,17 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, FilterOutputStream, OutputStream}
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 /**
- * Rotating WARC sink (K1, SURVEY §2.1): the reference's writer pool
- * (/root/reference/warc.go:149-256) re-expressed as per-partition task
- * writers — Spark's execution already IS the pool (one writer per task,
- * "maximize disk IO" per the README's WARCWriterPoolSize guidance).
- *
- * Reproduced semantics:
- *  - rotation by SERIALIZED-BYTE floor per file (isFileSizeExceeded,
- *    file.go:75-85, default 1000 MB: a file rotates before the first record
- *    that would start at or past the floor, so files exceed the target by at
- *    most one record) AND by record budget (the test-friendly analog)
- *  - `.open` suffix while writing, atomic rename on close
- *    (warc.go:189,244-248)
- *  - a leading `warcinfo` record per output file (WriteInfoRecord,
- *    write.go:156-186; default payload fields per utils.go:196-199) and
- *    `WARC-Warcinfo-ID` stamped on every record of the file (warc.go:218-219)
- *  - filename `Prefix-Timestamp-Serial-Host.warc.gz` (file.go:14-63) with a
- *    DETERMINISTIC serial = partitionId * 100000 + rotation index (the
- *    reference's global CAS counter is replaced per SURVEY §7.6 — no shared
- *    mutable state across tasks); the warcinfo record id is likewise a
- *    deterministic function of the filename, not a random UUID
- *  - gzip: one member per record (WarcIO.writeGzipMember) plus a sidecar
- *    `<file>.idx` of exact compressed member (offset, size) pairs — the
- *    coordinates the reference's counting reader tracks (read.go:50-83,
- *    319-341), laid down at write time so scans can split at member level
- *
- * Input schema: (version: string, headers: map<string,string>,
- * content: binary|string). Use [[toRecordColumns]] to shape arbitrary rows.
+ * Shapes rows into the record layout the WARC writer takes:
+ * (version: string, headers: map<string,string>, content: binary|string).
+ * Write the result with
+ * `df.write.format("graft.sources.WarcDataSource").mode("append").save(dir)`
+ * (see [[WarcWriteBuilder]] for rotation, naming, framing and publish).
  */
 object WarcSink {
 
-  // deterministic warcinfo ids, ISO dates, and the counting stream are
-  // shared with the DSv2 write path (WarcDataWriter)
-  private def urnUuidOf(seed: String): String = WarcDataWriter.urnUuidOf(seed)
-  private def isoDate(tsCompact: String): String = WarcDataWriter.isoDate(tsCompact)
-  private type CountingOutputStream = WarcDataWriter.Counting
-
-  /** warcinfo payload defaults (utils.go:196-199). */
-  def warcinfoFields(host: String): Seq[(String, String)] = Seq(
-    "hostname" -> host,
-    "format" -> "WARC file version 1.1",
-    "conformsTo" ->
-      "http://iipc.github.io/warc-specifications/specifications/warc-format/warc-1.1/")
-
-  /** Effective codec name from the legacy `gzip` flag + the explicit
-    * `compression` override: "gzip", "zstd", or "none". */
-  private def codecOf(gzip: Boolean, compression: String): String =
-    Option(compression).map(_.toLowerCase).getOrElse(if (gzip) "gzip" else "none")
-
-  def extOf(codec: String): String = codec match {
-    case "gzip" => "warc.gz"
-    case "zstd" => "warc.zst"
-    case "none" => "warc"
-    case other => throw new IllegalArgumentException(
-      s"unknown WARC compression '$other' (gzip | zstd | none)")
-  }
-
-  /** `compression` (gzip | zstd | none) overrides the legacy `gzip` flag.
-    * zstd (K6/K7, write.go:143-153 + utils.go:42-73): one SIZED frame per
-    * record, an optional raw-content `zstdDict` written as a leading
-    * skippable dictionary frame per rotated file, and the same sidecar
-    * `.idx` member index as gzip (frames are independently decompressible,
-    * so `.warc.zst` splits at record granularity too). */
-  def write(df: DataFrame, dir: String, prefix: String = "GRAFT",
-            tsCompact: String = "20231114221320000",
-            gzip: Boolean = true, maxRecordsPerFile: Int = 100000,
-            host: String = "local", compression: String = null,
-            zstdLevel: Int = 8, zstdDict: Array[Byte] = null,
-            maxFileBytes: Long = 1000L << 20): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val codec = codecOf(gzip, compression)
-    val ext = extOf(codec)
-    val framed = codec != "none" // per-record members -> sidecar index
-    df.toDF().foreachPartition { (rows: Iterator[Row]) =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var fileIdx = 0
-      var written = 0
-      var counting: CountingOutputStream = null
-      var openPath: java.nio.file.Path = null
-      var finalPath: java.nio.file.Path = null
-      var warcinfoId: String = null
-      val members = scala.collection.mutable.Buffer[(Long, Long)]()
-      lazy val zctx = WarcIO.zstdCompressCtx(zstdLevel, zstdDict)
-
-      def writeOne(version: String, headers: Seq[(String, String)], content: Array[Byte]): Unit = {
-        val start = counting.count
-        codec match {
-          case "gzip" => WarcIO.writeGzipMember(counting)(g => WarcIO.writeRecord(g, version, headers, content))
-          case "zstd" => WarcIO.writeZstdMember(counting, zctx)(z => WarcIO.writeRecord(z, version, headers, content))
-          case _ => WarcIO.writeRecord(counting, version, headers, content)
-        }
-        if (framed) members += ((start, counting.count - start))
-      }
-
-      def closeFile(): Unit = if (counting != null) {
-        counting.close()
-        if (framed) {
-          val idx = Files.newOutputStream(Paths.get(finalPath.toString + ".idx"))
-          try WarcIO.writeMemberIndex(idx, members.toSeq) finally idx.close()
-        }
-        Files.move(openPath, finalPath, StandardCopyOption.ATOMIC_MOVE)
-        members.clear()
-      }
-
-      def rollover(): Unit = {
-        closeFile()
-        val serial = pid * 100000 + fileIdx
-        val name = f"$prefix-$tsCompact-$serial%09d-$host.$ext"
-        finalPath = Paths.get(dir, name)
-        openPath = Paths.get(dir, name + ".open")
-        counting = new CountingOutputStream(
-          new BufferedOutputStream(Files.newOutputStream(openPath), 1 << 16))
-        fileIdx += 1
-        written = 0
-        // dictionary skippable frame leads the file (NewWriter, utils.go:76+);
-        // not a member: the .idx records only record frames after it
-        if (codec == "zstd" && zstdDict != null && zstdDict.nonEmpty)
-          WarcIO.writeZstdDictionaryFrame(counting, zstdDict)
-        // leading warcinfo record (write.go:156-186); its id stamps every
-        // subsequent record in this file as WARC-Warcinfo-ID (warc.go:218-219)
-        warcinfoId = urnUuidOf(s"warcinfo:$name")
-        val payload = warcinfoFields(host)
-          .map { case (k, v) => s"$k: $v\r\n" }.mkString.getBytes(StandardCharsets.UTF_8)
-        writeOne("WARC/1.1", Seq(
-          "WARC-Date" -> isoDate(tsCompact),
-          "WARC-Filename" -> name,
-          "WARC-Type" -> "warcinfo",
-          "WARC-Record-ID" -> warcinfoId,
-          "Content-Type" -> "application/warc-fields"), payload)
-      }
-
-      try {
-        rows.foreach { row =>
-          if (counting == null || written >= maxRecordsPerFile ||
-            counting.count >= maxFileBytes) rollover()
-          val version = row.getAs[String]("version")
-          val headers = row.getAs[Map[String, String]]("headers").toSeq
-          val content = row.get(row.fieldIndex("content")) match {
-            case b: Array[Byte] => b
-            case s: String => s.getBytes(StandardCharsets.UTF_8)
-            case null => Array.emptyByteArray
-          }
-          val stamped =
-            if (headers.exists(_._1.equalsIgnoreCase("WARC-Warcinfo-ID"))) headers
-            else headers :+ ("WARC-Warcinfo-ID" -> warcinfoId)
-          writeOne(version, stamped, content)
-          written += 1
-        }
-        closeFile()
-      } finally if (codec == "zstd") zctx.close() // free the native CCtx
-      ()
-    }
-  }
-
-  /** Shape the crawl's warc_rows (plus a content column) into sink rows.
+  /** Shape the crawl's warc_rows (plus a content column) into writer rows.
     * `keepDigests=false` drops the digest headers so the writer recomputes
     * the block digest from the actual content — use it whenever the content
     * column is not the original digested block. */

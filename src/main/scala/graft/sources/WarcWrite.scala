@@ -3,43 +3,62 @@ package graft.sources
 import java.io.BufferedOutputStream
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{MapType, StringType, StructType}
 
 /**
- * DataSourceV2 WARC write path:
- * `df.write.format("graft.sources.WarcDataSource").save(dir)` over rows of
- * (version string, headers map<string,string>, content string|binary) — the
- * same record shape `WarcSink.toRecordColumns` produces. All I/O goes
- * through the Hadoop FileSystem of the target path's scheme, with the
- * driver's resolved configuration shipped to the tasks — the write works on
- * any shared filesystem (file:/ in tests, HDFS/object storage on a cluster),
- * NOT just a driver-local disk.
+ * The WARC writer (K1, SURVEY §2.1):
+ * `df.write.format("graft.sources.WarcDataSource").mode("append").save(dir)`
+ * over rows of (version string, headers map<string,string>, content
+ * string|binary) — the record shape `WarcSink.toRecordColumns` produces.
+ * It is the reference's writer pool (warc.go:149-256) re-expressed as
+ * per-partition task writers: Spark's execution already IS the pool. All
+ * I/O goes through the Hadoop FileSystem of the target path's scheme, with
+ * the driver's resolved configuration shipped to the tasks — the write works
+ * on any shared filesystem (file:/ in tests, HDFS/object storage on a
+ * cluster), NOT just a driver-local disk.
+ *
+ * Per-file layout:
+ *  - rotation by SERIALIZED-BYTE floor (isFileSizeExceeded, file.go:75-85,
+ *    default 1000 MB: a file rotates before the first record that would
+ *    start at or past the floor, so files exceed the target by at most one
+ *    record) AND by record budget
+ *  - filename `Prefix-Timestamp-Serial-Host.<ext>` (file.go:14-63) with a
+ *    DETERMINISTIC serial = partitionId * 100000 + rotation index (the
+ *    reference's global CAS counter is replaced per SURVEY §7.6 — no shared
+ *    mutable state across tasks)
+ *  - a leading `warcinfo` record per file (WriteInfoRecord, write.go:156-186;
+ *    payload fields per utils.go:196-199) whose id, a deterministic function
+ *    of the filename, is stamped on every record as WARC-Warcinfo-ID
+ *    (warc.go:218-219)
+ *  - gzip: one member per record; zstd (K6/K7, write.go:143-153): one SIZED
+ *    frame per record, after an optional leading skippable dictionary frame;
+ *    both get a sidecar `<file>.idx` of exact compressed member (offset,
+ *    size) pairs (read.go:50-83, 319-341), so scans split at record
+ *    granularity
  *
  * Commit protocol — gowarc's `.open` -> rename handoff (warc.go:189,244-248)
- * lifted onto Spark's BatchWrite coordinator, which is strictly stronger
- * than the per-task rename of the `foreachPartition` sink:
- *  - every task writes `<final>.open.<taskId>` files (attempt-unique names,
- *    so a speculative or retried attempt can never corrupt a sibling's file)
- *    and reports (open, final) pairs in its WriterCommitMessage
+ * lifted onto Spark's BatchWrite coordinator:
+ *  - every task writes `<final>.open.<writeId>-<taskId>` files
+ *    (attempt-unique names, so a speculative or retried attempt can never
+ *    corrupt a sibling's file) and reports (open, final) pairs in its
+ *    WriterCommitMessage
  *  - the driver's commit() renames ALL files of the winning attempts after
- *    EVERY task succeeded — an all-or-nothing publish; abort() deletes the
- *    partials of failed jobs
+ *    EVERY task succeeded — an all-or-nothing publish; abort() deletes every
+ *    attempt file of the failed write by its writeId, including those of
+ *    tasks whose commit message the failed job never delivered
  *  - file names are DETERMINISTIC (SURVEY §7.6), so in append mode a name
  *    collision with an earlier write fails the commit LOUDLY instead of
  *    silently replacing data (use a distinct prefix/tsCompact per logical
  *    write, or mode("overwrite") to deliberately replace)
- * Per-file content matches WarcSink exactly: leading warcinfo record with a
- * deterministic id, WARC-Warcinfo-ID stamped on every record, one gzip
- * member per record, sidecar `.idx` member index.
  *
- * Options: prefix, tsCompact, gzip (true), compression (gzip | zstd | none —
- * overrides the gzip flag), zstdLevel (8), zstdDictBase64 (raw-content
- * dictionary, written as a leading skippable frame per file — K7),
- * maxRecordsPerFile, host.
+ * Options: prefix (GRAFT), tsCompact (20231114221320000), compression
+ * (gzip | zstd | none, default gzip), zstdLevel (8), zstdDictBase64
+ * (raw-content dictionary, written as a leading skippable frame per file —
+ * K7), maxRecordsPerFile (100000), maxFileBytes (1000 MB), host (local).
  */
 class WarcWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuilder
     with SupportsTruncate {
@@ -51,9 +70,8 @@ class WarcWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuilde
 class WarcWrite(path: String, info: LogicalWriteInfo, overwrite: Boolean) extends Write {
   override def toBatch: BatchWrite = {
     val o = info.options
-    val codec = Option(o.get("compression")).map(_.toLowerCase)
-      .getOrElse(if (o.getBoolean("gzip", true)) "gzip" else "none")
-    WarcSink.extOf(codec) // validate early, on the driver
+    val codec = o.getOrDefault("compression", "gzip").toLowerCase
+    WarcDataWriter.extOf(codec) // validate early, on the driver
     new WarcBatchWrite(
       path,
       info.schema(),
@@ -80,9 +98,11 @@ class WarcBatchWrite(dir: String, schema: StructType, prefix: String, tsCompact:
                      overwrite: Boolean, conf: SerializableHadoopConf)
     extends BatchWrite {
 
+  private val writeId = java.util.UUID.randomUUID().toString
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new WarcWriterFactory(dir, schema, prefix, tsCompact, codec, zstdLevel, zstdDict,
-      maxRecordsPerFile, maxFileBytes, host, conf)
+      maxRecordsPerFile, maxFileBytes, host, writeId, conf)
 
   /** All-or-nothing publish: rename every attempt file after every task
     * committed (driver side, after the write job succeeded).
@@ -133,30 +153,32 @@ class WarcBatchWrite(dir: String, schema: StructType, prefix: String, tsCompact:
     }
   }
 
+  /** Sweeps by writeId rather than by `messages`: a task that committed
+    * after another task failed the job never delivers its message, but its
+    * staged files still carry the id. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(dir).getFileSystem(conf.value)
-    messages.filter(_ != null).foreach {
-      case WarcCommitMessage(files) =>
-        files.foreach(f => fs.delete(new HPath(f.openPath), false))
-      case _ =>
-    }
+    val dirPath = new HPath(dir)
+    val fs = dirPath.getFileSystem(conf.value)
+    if (fs.exists(dirPath)) fs.listStatus(dirPath).map(_.getPath)
+      .filter(_.getName.contains(s".open.$writeId-"))
+      .foreach(fs.delete(_, false))
   }
 }
 
 class WarcWriterFactory(dir: String, schema: StructType, prefix: String, tsCompact: String,
                         codec: String, zstdLevel: Int, zstdDict: Array[Byte],
                         maxRecordsPerFile: Int, maxFileBytes: Long, host: String,
-                        conf: SerializableHadoopConf)
+                        writeId: String, conf: SerializableHadoopConf)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new WarcDataWriter(dir, schema, prefix, tsCompact, codec, zstdLevel, zstdDict,
-      maxRecordsPerFile, maxFileBytes, host, partitionId, taskId, conf)
+      maxRecordsPerFile, maxFileBytes, host, partitionId, s"$writeId-$taskId", conf)
 }
 
 class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact: String,
                      codec: String, zstdLevel: Int, zstdDict: Array[Byte],
                      maxRecordsPerFile: Int, maxFileBytes: Long, host: String,
-                     partitionId: Int, taskId: Long, conf: SerializableHadoopConf)
+                     partitionId: Int, attempt: String, conf: SerializableHadoopConf)
     extends DataWriter[InternalRow] {
 
   private val versionIdx = schema.fieldIndex("version")
@@ -167,10 +189,17 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
     "headers column must be map<string,string>")
 
   private val dirPath = new HPath(dir)
-  private val fs = dirPath.getFileSystem(conf.value)
+  // raw bytes only: a checksummed local filesystem would add `.crc` sidecars
+  // that go stale when Mend truncates a file or rewrites its `.idx` in place,
+  // failing later scans; WARC records carry their own digests and every
+  // gzip member / zstd frame its own checksum
+  private val fs = dirPath.getFileSystem(conf.value) match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
   fs.mkdirs(dirPath) // idempotent
 
-  private val ext = WarcSink.extOf(codec)
+  private val ext = WarcDataWriter.extOf(codec)
   private val framed = codec != "none" // per-record members -> sidecar index
   private var fileIdx = 0
   private var written = 0
@@ -197,7 +226,7 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
   private def closeFile(): Unit = if (out != null) {
     out.close()
     if (framed) {
-      val idxOpen = new HPath(dirPath, finalPath.getName + s".idx.open.$taskId")
+      val idxOpen = new HPath(dirPath, finalPath.getName + s".idx.open.$attempt")
       val s = fs.create(idxOpen, true)
       try WarcIO.writeMemberIndex(s, members.toSeq) finally s.close()
       committed += WarcFileCommit(idxOpen.toString,
@@ -215,7 +244,7 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
     finalPath = new HPath(dirPath, name)
     // attempt-unique working name: concurrent speculative attempts never
     // touch each other's bytes; only the committed attempt's files publish
-    openPath = new HPath(dirPath, name + s".open.$taskId")
+    openPath = new HPath(dirPath, name + s".open.$attempt")
     out = new WarcDataWriter.Counting(
       new BufferedOutputStream(fs.create(openPath, true), 1 << 16))
     fileIdx += 1
@@ -224,7 +253,7 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
     if (codec == "zstd" && zstdDict != null && zstdDict.nonEmpty)
       WarcIO.writeZstdDictionaryFrame(out, zstdDict)
     warcinfoId = WarcDataWriter.urnUuidOf(s"warcinfo:$name")
-    val payload = WarcSink.warcinfoFields(host)
+    val payload = WarcDataWriter.warcinfoFields(host)
       .map { case (k, v) => s"$k: $v\r\n" }.mkString.getBytes(StandardCharsets.UTF_8)
     writeOne("WARC/1.1", Seq(
       "WARC-Date" -> WarcDataWriter.isoDate(tsCompact),
@@ -275,6 +304,21 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
 }
 
 object WarcDataWriter {
+  private[sources] def extOf(codec: String): String = codec match {
+    case "gzip" => "warc.gz"
+    case "zstd" => "warc.zst"
+    case "none" => "warc"
+    case other => throw new IllegalArgumentException(
+      s"unknown WARC compression '$other' (gzip | zstd | none)")
+  }
+
+  /** warcinfo payload defaults (utils.go:196-199). */
+  private[sources] def warcinfoFields(host: String): Seq[(String, String)] = Seq(
+    "hostname" -> host,
+    "format" -> "WARC file version 1.1",
+    "conformsTo" ->
+      "http://iipc.github.io/warc-specifications/specifications/warc-format/warc-1.1/")
+
   private[sources] final class Counting(out: java.io.OutputStream)
       extends java.io.FilterOutputStream(out) {
     var count: Long = 0L

@@ -19,9 +19,8 @@ object WarcProbe {
     import org.apache.spark.sql.functions._
     val rows = Seq(("WARC/1.1", Map("WARC-Type" -> "response", "WARC-Record-ID" -> "<urn:uuid:x>"), "abc"))
       .toDF("version", "headers", "content")
-    graft.sources.WarcSink.write(rows.coalesce(1), dir.toString)
-    val listing = Files.list(dir)
-    val f = try listing.iterator().next() finally listing.close()
+    rows.coalesce(1).write.format(fmt).mode("append").save(dir.toString)
+    val f = dir.resolve(new java.io.File(dir.toString).list().filter(_.endsWith(".warc.gz")).head)
     println("clean scan count: " + spark.read.format(fmt).load(dir.toString).count())
     Files.write(f, "GARBAGE-NOT-GZIP".getBytes, StandardOpenOption.APPEND)
     try println("garbage scan count: " + spark.read.format(fmt).load(dir.toString).count())
@@ -33,7 +32,7 @@ object WarcProbe {
 
     val mixed = Files.createTempDirectory("warc-mixed")
     Files.write(mixed.resolve("notes.txt"), "not a warc".getBytes)
-    graft.sources.WarcSink.write(rows.coalesce(1), mixed.toString)
+    rows.coalesce(1).write.format(fmt).mode("append").save(mixed.toString)
     println("mixed dir count (txt ignored): " + spark.read.format(fmt).load(mixed.toString).count())
     spark.stop()
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.WarcSink
 
 /** Manual end-to-end drive of the public API: crawl a synthetic web, ship
-  * warc_rows through the rotating gzip sink, scan them back with the WARC
+  * warc_rows through the rotating gzip writer, scan them back with the WARC
   * DataSourceV2 (pruned + filtered), print what a user would see. */
 object WarcRoundTripDemo {
   def main(args: Array[String]): Unit = {
@@ -29,8 +29,9 @@ object WarcRoundTripDemo {
     val shaped = WarcSink.toRecordColumns(
       res.warcRows.withColumn("content", concat_ws("|", col("warc_type"), col("target_uri"))),
       "content")
-    WarcSink.write(shaped, dir, maxRecordsPerFile = 200)
-    println(s"sink dir listing: ${new java.io.File(dir).list().sorted.mkString(", ")}")
+    shaped.write.format("graft.sources.WarcDataSource").mode("append")
+      .option("maxRecordsPerFile", "200").save(dir)
+    println(s"writer dir listing: ${new java.io.File(dir).list().sorted.mkString(", ")}")
 
     val back = spark.read.format("graft.sources.WarcDataSource").load(dir)
     println(s"scanned rows: ${back.count()} (crawl emitted ${res.warcRows.count()})")

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** End-to-end drive of the zstd WARC surface (K6/K7): sink with a raw-content
+/** End-to-end drive of the zstd WARC surface (K6/K7): writer with a raw-content
   * dictionary -> skippable dict frame + sized per-record frames + sidecar
   * index -> member-aligned split scan; plus foreign bzip2/xz sniffing. */
 object ZstdWarcDemo {
@@ -26,8 +26,10 @@ object ZstdWarcDemo {
 
     val dict = "WARC/1.1\r\nWARC-Type: response\r\ndemo-payload-".getBytes("UTF-8")
     val dir = Files.createTempDirectory("zstd-demo").toString
-    graft.sources.WarcSink.write(rows.coalesce(1), dir,
-      compression = "zstd", zstdDict = dict, maxRecordsPerFile = 1000)
+    rows.coalesce(1).write.format(fmt).mode("append")
+      .option("compression", "zstd")
+      .option("zstdDictBase64", java.util.Base64.getEncoder.encodeToString(dict))
+      .option("maxRecordsPerFile", "1000").save(dir)
 
     val zst = new java.io.File(dir).list().filter(_.endsWith(".warc.zst"))
     println(s"files: ${zst.mkString(",")}")

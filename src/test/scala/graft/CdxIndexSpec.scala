@@ -6,7 +6,6 @@ import java.util.zip.GZIPInputStream
 import org.apache.spark.sql.functions._
 
 import graft.functions.UrlCanon
-import graft.sources.WarcSink
 
 /** CDX index generation: SURT keys, sortedness, and — the index's whole
   * point — RANDOM ACCESS: every (filename, offset, length) triple must
@@ -43,7 +42,7 @@ class CdxIndexSpec extends SparkSpec {
 
   test("CDX lines: fields, sortedness, and random-access replay of every member") {
     val warcDir = Files.createTempDirectory("cdx-src").toString
-    WarcSink.write(responses(40), warcDir, maxRecordsPerFile = 15, gzip = true)
+    writeWarc(responses(40), warcDir, "maxRecordsPerFile" -> 15)
 
     val idx = graft.jobs.CdxIndex.lines(spark, warcDir).cache()
     val rows = idx.collect()
@@ -87,8 +86,8 @@ class CdxIndexSpec extends SparkSpec {
   test("merge: two crawls' indexes interleave sorted; exact duplicate captures collapse") {
     val dirA = Files.createTempDirectory("cdx-merge-a").toString
     val dirB = Files.createTempDirectory("cdx-merge-b").toString
-    WarcSink.write(responses(20), dirA, gzip = true)
-    WarcSink.write(responses(30), dirB, gzip = true) // first 20 = same captures
+    writeWarc(responses(20), dirA)
+    writeWarc(responses(30), dirB) // first 20 = same captures
     val a = graft.jobs.CdxIndex.lines(spark, dirA)
     val b = graft.jobs.CdxIndex.lines(spark, dirB)
     val merged = graft.jobs.CdxIndex.merge(a, b)
@@ -113,7 +112,7 @@ class CdxIndexSpec extends SparkSpec {
 
   test("zipnum: gzip-member blocks tile the shards; cluster.idx binary-search replays") {
     val warcDir = Files.createTempDirectory("zipnum-src").toString
-    WarcSink.write(responses(40), warcDir, maxRecordsPerFile = 15, gzip = true)
+    writeWarc(responses(40), warcDir, "maxRecordsPerFile" -> 15)
     val outDir = Files.createTempDirectory("zipnum-out").toString
     val cluster = graft.jobs.CdxIndex.writeZipnum(spark, warcDir, outDir, blockLines = 7)
     val rows = cluster.collect()
@@ -156,6 +155,18 @@ class CdxIndexSpec extends SparkSpec {
     assert(spark.read.text(s"$outDir/cluster.idx").count() === rows.length)
   }
 
+  test("zipnum: a shard task that fails mid-partition leaves no temp file") {
+    val outDir = Files.createTempDirectory("cdx-zip-fail").toString
+    val lines = spark.range(0, 40, 1, 1).select(
+      when(col("id") === 25, raise_error(lit("planted cdx failure")))
+        .otherwise(format_string("example,h%02d)/ 20231114221320 x", col("id")))
+        .as("cdx_line"))
+    // blocks 0-5 reach the attempt's temp file before row 25 raises
+    intercept[Exception](graft.jobs.CdxIndex.writeZipnumLines(lines, outDir, blockLines = 4))
+    val left = new java.io.File(outDir).list().toSeq
+    assert(!left.exists(_.endsWith(".tmp")), left.mkString(", "))
+  }
+
   test("nearest-capture lookup: parse round-trip, numeric-nearest pick, earlier-wins tie") {
     import spark.implicits._
     // 3 captures per url at ts ...20, ...40, ...41 (seconds field)
@@ -173,7 +184,7 @@ class CdxIndexSpec extends SparkSpec {
         .cast("binary").as("content"))
     val warcDir = Files.createTempDirectory("cdx-look-src").toString
     val idxDir = Files.createTempDirectory("cdx-look-idx").toString
-    WarcSink.write(caps, warcDir, gzip = true)
+    writeWarc(caps, warcDir)
     graft.jobs.CdxIndex.write(spark, warcDir, idxDir)
 
     val parsed = graft.jobs.CdxIndex.parse(spark.read.text(idxDir))

@@ -49,7 +49,7 @@ class CompactSpec extends SparkSpec {
         lit("WARC-Type"), lit("metadata"),
         lit("WARC-Date"), lit("2023-11-14T22:00:00Z")).as("headers"),
       lit("via: somewhere").cast("binary").as("content"))
-    graft.sources.WarcSink.write(http.unionByName(bare).unionByName(meta), dir, gzip = true)
+    writeWarc(http.unionByName(bare).unionByName(meta), dir)
   }
 
   private def scan(dir: String) =

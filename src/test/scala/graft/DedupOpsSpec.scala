@@ -373,6 +373,43 @@ class DedupOpsSpec extends SparkSpec {
     }
   }
 
+  test("portable_hash64_tokens and xor_min_sig are bit-identical to their HOF forms") {
+    import spark.implicits._
+    import graft.functions.SketchExprs.{portable_hash64_tokens, xor_min_sig}
+    val rnd = new scala.util.Random(37)
+    val alphabet = "abc déü東 01"
+    // words may be empty strings; token arrays may be empty
+    def word() = (0 until rnd.nextInt(8)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+    val inputs = (0 until 200).map(i => (i.toLong, Seq.fill(rnd.nextInt(30))(word()),
+      Seq.fill(rnd.nextInt(40))(rnd.nextLong()))) :+
+      (998L, Seq.empty[String], Seq(Long.MinValue, Long.MaxValue, 0L, -1L)) :+
+      (999L, Seq.empty[String], Seq.empty[Long])
+    assert(inputs.exists(_._2.exists(_.exists(_ > 127))) && inputs.exists(_._2.contains("")))
+    val docs = inputs.toDF("id", "toks", "raw")
+    val salts = Seq.fill(16)(rnd.nextLong()) ++ Seq(0L, -1L, Long.MinValue, Long.MaxValue)
+    def hofSig(hs: org.apache.spark.sql.Column) =
+      array(salts.map(s => array_min(transform(hs, h => h.bitwiseXOR(lit(s))))): _*)
+    val staged = docs.withColumn("hs", portable_hash64_tokens(col("toks")))
+    val cmp = staged.select(
+      col("hs"), transform(col("toks"), t => graft.ops.PipelineOps.portableHash64(t)),
+      xor_min_sig(col("hs"), salts), hofSig(col("hs")),
+      xor_min_sig(col("raw"), salts), hofSig(col("raw")), size(col("raw")))
+      .collect()
+    def sigsAgree(krn: Seq[Long], hof: Seq[Any], inputSize: Int): Unit =
+      if (inputSize > 0) assert(krn === hof)
+      else { // empty set: the kernel fills Long.MaxValue, array_min of nothing is null
+        assert(krn === Seq.fill(salts.size)(Long.MaxValue))
+        assert(hof.forall(_ == null))
+      }
+    cmp.foreach { r =>
+      val hs = r.getSeq[Long](0)
+      assert(hs === r.getSeq[Long](1))
+      sigsAgree(r.getSeq[Long](2), r.getSeq[Any](3), hs.size)
+      sigsAgree(r.getSeq[Long](4), r.getSeq[Any](5), r.getInt(6))
+    }
+    assert(cmp.exists(_.getSeq[Long](0).isEmpty) && cmp.exists(_.getInt(6) == 0))
+  }
+
   test("chunkDedup skew: a chunk duplicated 1e5x — aggregate form equals the window form") {
     import spark.implicits._
     // the aggregate first-occurrence rule must collapse the hot chunk in

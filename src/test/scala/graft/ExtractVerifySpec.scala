@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.jobs.{Extract, VerifyWarc}
-import graft.sources.WarcSink
 import graft.warc.HttpExprs
 
 /** A3 verify job + K8 extract sink + HTTP expressions. */
@@ -23,7 +22,7 @@ class ExtractVerifySpec extends SparkSpec {
         if (corruptDigest) lit("sha1:WRONGWRONGWRONGWRONGWRONGWRONGWR")
         else graft.functions.WarcDigest.warc_sha1_b32(concat(lit("body-"), col("id").cast("string")))).as("headers"),
       concat(lit("body-"), col("id").cast("string")).cast("string").as("content"))
-    WarcSink.write(rows.coalesce(1), dir)
+    writeWarc(rows.coalesce(1), dir)
   }
 
   test("VerifyWarc: valid file aggregates clean; corrupt digests are counted") {
@@ -58,8 +57,8 @@ class ExtractVerifySpec extends SparkSpec {
       concat(lit("body-"), col("id").cast("string")))
     val good = Files.createTempDirectory("pgood").toString
     val bad = Files.createTempDirectory("pbad").toString
-    WarcSink.write(httpRows(goodDigest).coalesce(1), good)
-    WarcSink.write(httpRows(lit("sha1:WRONGWRONGWRONGWRONGWRONGWRONGWR")).coalesce(1), bad)
+    writeWarc(httpRows(goodDigest).coalesce(1), good)
+    writeWarc(httpRows(lit("sha1:WRONGWRONGWRONGWRONGWRONGWRONGWR")).coalesce(1), bad)
     val g = VerifyWarc.run(spark, good).head()
     assert(g.getAs[Long]("payload_digest_errors") === 0)
     assert(g.getAs[Boolean]("valid"))
@@ -85,7 +84,7 @@ class ExtractVerifySpec extends SparkSpec {
           lit("WARC-Payload-Digest"), col("pd")).as("headers"),
         col("content"))
     val dir = Files.createTempDirectory("pscope").toString
-    WarcSink.write(rows.coalesce(1), dir)
+    writeWarc(rows.coalesce(1), dir)
     val r = VerifyWarc.run(spark, dir).head()
     assert(r.getAs[Long]("payload_digest_errors") === 1) // only the unparseable one
   }

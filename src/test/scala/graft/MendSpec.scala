@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.functions._
 
 import graft.jobs.Mend
-import graft.sources.WarcSink
 
 /** A4 mend semantics: truncate-at-last-valid + .open rename (mend.go:298-375),
   * plain files by byte offset, gzip files by exact compressed member offset. */
@@ -19,7 +18,7 @@ class MendSpec extends SparkSpec {
         lit("WARC-Type"), lit("response"),
         lit("WARC-Date"), lit("2023-11-14T22:13:20Z")).as("headers"),
       concat(lit("payload-"), col("id").cast("string")).cast("string").as("content"))
-    WarcSink.write(rows.coalesce(1), dir, gzip = gzip)
+    writeWarc(rows.coalesce(1), dir, "compression" -> (if (gzip) "gzip" else "none"))
   }
 
   test("clean file is untouched; truncated tail is cut at last valid record") {
@@ -76,7 +75,7 @@ class MendSpec extends SparkSpec {
     val p = Paths.get(dir, f)
     val open = Paths.get(dir, f + ".open")
     val bytes = Files.readAllBytes(p)
-    // read the sink's sidecar to find a mid-member chop point: keep the first
+    // read the writer's sidecar to find a mid-member chop point: keep the first
     // 6 members plus HALF of the 7th
     val idxIn = Files.newInputStream(Paths.get(p.toString + ".idx"))
     val members = try graft.sources.WarcIO.readMemberIndex(idxIn) finally idxIn.close()
@@ -173,7 +172,7 @@ class MendSpec extends SparkSpec {
           lit("WARC-Date"), lit("2023-11-14T22:13:20Z")).as("headers"),
         concat(lit("payload-"), col("id").cast("string"),
           lit("-"), repeat(lit("z"), 64)).cast("string").as("content"))
-      WarcSink.write(rows.coalesce(1), dir, compression = codec)
+      writeWarc(rows.coalesce(1), dir, "compression" -> codec)
       val ext = if (codec == "gzip") ".warc.gz" else ".warc.zst"
       val f = new java.io.File(dir).list().find(_.endsWith(ext)).get
       val intact = Files.readAllBytes(Paths.get(dir, f))

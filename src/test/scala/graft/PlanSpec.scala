@@ -208,7 +208,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val rows = Seq(("WARC/1.1", Map("WARC-Type" -> "response", "WARC-Record-ID" -> "<urn:uuid:p>"), "x"))
       .toDF("version", "headers", "content")
-    graft.sources.WarcSink.write(rows.coalesce(1), tmp)
+    writeWarc(rows.coalesce(1), tmp)
     val q = spark.read.format("graft.sources.WarcDataSource").load(tmp)
       .filter(col("warc_type") === "response").select("record_id")
     q.collect()

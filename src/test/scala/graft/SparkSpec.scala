@@ -1,11 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session (one per suite, per spark_guide.md). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Writes (version, headers, content) rows as WARC files into `dir`
+    * through the DSv2 writer; `opts` are its write options. */
+  def writeWarc(df: DataFrame, dir: String, opts: (String, Any)*): Unit =
+    df.write.format("graft.sources.WarcDataSource").mode("append")
+      .options(opts.map { case (k, v) => k -> v.toString }.toMap).save(dir)
 }
 
 object SparkSpec {

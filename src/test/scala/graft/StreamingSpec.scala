@@ -102,8 +102,7 @@ class StreamingSpec extends SparkSpec {
         lit("WARC-Type"), lit("resource")).as("headers"),
       concat(lit(s"$tag-"), col("id").cast("string")).cast("string").as("content"))
     // generation 1 lands before the stream starts
-    graft.sources.WarcSink.write(mkRows("g1", 30).coalesce(1), dir,
-      tsCompact = "20240101000000000")
+    writeWarc(mkRows("g1", 30).coalesce(1), dir, "tsCompact" -> "20240101000000000")
 
     val q = spark.readStream.format("graft.sources.WarcDataSource")
       .option("maxPartitionBytes", "4096").load(dir)
@@ -115,8 +114,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("warc_stream_out").count() === 30)
       // generation 2 arrives mid-stream (distinct tsCompact: no name clash)
-      graft.sources.WarcSink.write(mkRows("g2", 20).coalesce(1), dir,
-        tsCompact = "20240101000100000")
+      writeWarc(mkRows("g2", 20).coalesce(1), dir, "tsCompact" -> "20240101000100000")
       q.processAllAvailable()
       val rows = spark.table("warc_stream_out")
       assert(rows.count() === 50) // each file consumed exactly once
@@ -230,8 +228,7 @@ class StreamingSpec extends SparkSpec {
         lit("WARC-Date"), lit("2024-01-01T00:00:00Z")).as("headers"),
       concat(lit("HTTP/1.1 200 OK\r\n\r\nb"), col("id").cast("string"))
         .cast("binary").as("content"))
-    graft.sources.WarcSink.write(mkResponses("ga", 12).coalesce(1), dir,
-      tsCompact = "20240101000000000")
+    writeWarc(mkResponses("ga", 12).coalesce(1), dir, "tsCompact" -> "20240101000000000")
 
     val q = graft.jobs.CdxIndex.linesFrom(
       spark.readStream.format("graft.sources.WarcDataSource").load(dir))
@@ -241,8 +238,7 @@ class StreamingSpec extends SparkSpec {
     try {
       q.processAllAvailable()
       assert(spark.table("cdx_stream_out").count() === 12)
-      graft.sources.WarcSink.write(mkResponses("gb", 8).coalesce(1), dir,
-        tsCompact = "20240101000100000")
+      writeWarc(mkResponses("gb", 8).coalesce(1), dir, "tsCompact" -> "20240101000100000")
       q.processAllAvailable()
       // streamed delta lines == the batch index over the same dir (order aside)
       val streamed = spark.table("cdx_stream_out")

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.WarcSink
 
-/** S1/S2/K1 round-trip: rotating gzip sink (one member per record) back
-  * through the DataSourceV2 scan, with pruning + pushdown checks. */
+/** S1/S2/K1 round-trip: the rotating DSv2 writer (one gzip member per
+  * record) back through the DataSourceV2 scan, with pruning + pushdown
+  * checks. */
 class WarcSourceSpec extends SparkSpec {
 
   private val Fmt = "graft.sources.WarcDataSource"
@@ -27,7 +28,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("gzip round-trip: sink then scan reproduces records (per-record members)") {
     val dir = Files.createTempDirectory("warcsrc").toString
-    WarcSink.write(sampleRows(100).repartition(4), dir, maxRecordsPerFile = 10)
+    writeWarc(sampleRows(100).repartition(4), dir, "maxRecordsPerFile" -> 10)
     val back = spark.read.format(Fmt).load(dir).cache()
     val nFiles = new java.io.File(dir).list().count(_.endsWith(".warc.gz"))
     // one warcinfo record leads every output file (write.go:156-186)
@@ -54,8 +55,8 @@ class WarcSourceSpec extends SparkSpec {
   test("byte-size rotation: files straddle the maxFileBytes floor; round-trip intact") {
     val floor = 4096L
     val dir = Files.createTempDirectory("warcbytes").toString
-    WarcSink.write(sampleRows(200).coalesce(1), dir,
-      maxRecordsPerFile = 1000000, maxFileBytes = floor)
+    writeWarc(sampleRows(200).coalesce(1), dir,
+      "maxRecordsPerFile" -> 1000000, "maxFileBytes" -> floor)
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".warc.gz")).sortBy(_.getName)
     assert(files.length > 1, "the byte floor must force rotation")
@@ -66,25 +67,16 @@ class WarcSourceSpec extends SparkSpec {
     files.foreach(f => assert(f.length < floor + 2048, s"${f.getName} overshoot"))
     val back = spark.read.format(Fmt).load(dir)
     assert(back.filter(col("warc_type") =!= "warcinfo").count() === 200)
-
-    // the DSv2 writer honours the same option with identical layout
-    val dir2 = Files.createTempDirectory("warcbytes2").toString
-    sampleRows(200).coalesce(1).write.format(Fmt)
-      .option("maxFileBytes", floor).mode("append").save(dir2)
-    val files2 = new java.io.File(dir2).listFiles()
-      .filter(_.getName.endsWith(".warc.gz"))
-    assert(files2.length === files.length)
-    assert(files2.map(_.length).sorted.toSeq === files.map(_.length).sorted.toSeq)
   }
 
   test("member coordinates: reader-side tracking equals writer-side sidecar index") {
     val dir = Files.createTempDirectory("warcidx").toString
-    WarcSink.write(sampleRows(30).coalesce(1), dir, maxRecordsPerFile = 100)
+    writeWarc(sampleRows(30).coalesce(1), dir, "maxRecordsPerFile" -> 100)
     val files = new java.io.File(dir).list().filter(_.endsWith(".warc.gz")).sorted
     assert(files.length === 1)
     val warc = s"$dir/${files.head}"
     // two independent computations of the member layout (the reference's
-    // external-oracle pattern, read_test.go:345-401): the sink counted bytes
+    // external-oracle pattern, read_test.go:345-401): the writer counted bytes
     // while WRITING; the scan re-derives coordinates while INFLATING
     val idxIn = Files.newInputStream(java.nio.file.Paths.get(warc + ".idx"))
     val sidecar = try graft.sources.WarcIO.readMemberIndex(idxIn) finally idxIn.close()
@@ -103,7 +95,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("member index splits the scan into member-aligned range partitions") {
     val dir = Files.createTempDirectory("warcsplit").toString
-    WarcSink.write(sampleRows(200).coalesce(1), dir, maxRecordsPerFile = 1000)
+    writeWarc(sampleRows(200).coalesce(1), dir, "maxRecordsPerFile" -> 1000)
     // tiny split target => many range partitions over one file
     val back = spark.read.format(Fmt).option("maxPartitionBytes", "2048").load(dir)
     assert(back.rdd.getNumPartitions > 4, s"got ${back.rdd.getNumPartitions} partitions")
@@ -118,8 +110,8 @@ class WarcSourceSpec extends SparkSpec {
 
   test("IndexWarc makes a foreign index-less .warc.gz splittable; rows identical") {
     val dir = Files.createTempDirectory("warcforeign").toString
-    WarcSink.write(sampleRows(200).coalesce(1), dir, maxRecordsPerFile = 1000)
-    // simulate a FOREIGN archive: strip the sink's sidecar index
+    writeWarc(sampleRows(200).coalesce(1), dir, "maxRecordsPerFile" -> 1000)
+    // simulate a FOREIGN archive: strip the writer's sidecar index
     new java.io.File(dir).listFiles().filter(_.getName.endsWith(".idx"))
       .foreach(f => assert(f.delete()))
     val unsplit = spark.read.format(Fmt).option("maxPartitionBytes", "2048").load(dir)
@@ -166,9 +158,28 @@ class WarcSourceSpec extends SparkSpec {
     back.unpersist()
   }
 
+  test("failed write: abort removes every attempt file; nothing publishes") {
+    // the content column raises on a late row, after the task already
+    // rotated (and staged with its .idx) several files
+    def failing(parts: Int) = sampleRows(60).coalesce(1).repartition(parts)
+      .withColumn("content", when(col("headers")("WARC-Record-ID") === "<urn:uuid:r45>",
+        raise_error(lit("planted row failure"))).otherwise(col("content")))
+    // one partition: the task's DataWriter.abort; two: the other task may
+    // already have committed, so the job's BatchWrite.abort must clean it up
+    for (parts <- Seq(1, 2)) {
+      val dir = Files.createTempDirectory("warcabort").toString
+      val e = intercept[Exception](writeWarc(failing(parts), dir, "maxRecordsPerFile" -> 10))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("planted row failure")))
+      // no published .warc*/.idx file and no *.open.* attempt file
+      val left = new java.io.File(dir).list().toSeq
+      assert(left.isEmpty, s"$parts partition(s) left: ${left.mkString(", ")}")
+    }
+  }
+
   test("plain (uncompressed) .warc scan works and headers map is case-insensitive-keyed") {
     val dir = Files.createTempDirectory("warcplain").toString
-    WarcSink.write(sampleRows(10).coalesce(1), dir, gzip = false)
+    writeWarc(sampleRows(10).coalesce(1), dir, "compression" -> "none")
     val back = spark.read.format(Fmt).load(dir)
     assert(back.count() === 11) // 10 records + the file's warcinfo
     val h = back.select("headers").head().getAs[Map[String, String]](0)
@@ -177,7 +188,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("filter pushdown on warc_type reaches the scan; results correct") {
     val dir = Files.createTempDirectory("warcpush").toString
-    WarcSink.write(sampleRows(90).coalesce(1), dir)
+    writeWarc(sampleRows(90).coalesce(1), dir)
     val q = spark.read.format(Fmt).load(dir).filter(col("warc_type") === "request")
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("pushed=[EqualTo(warc_type,request)]"), s"plan was:\n$plan")
@@ -190,7 +201,7 @@ class WarcSourceSpec extends SparkSpec {
 
   test("column pruning: content column not in read schema when unused") {
     val dir = Files.createTempDirectory("warcprune").toString
-    WarcSink.write(sampleRows(5).coalesce(1), dir)
+    writeWarc(sampleRows(5).coalesce(1), dir)
     val q = spark.read.format(Fmt).load(dir).select("record_id", "warc_type")
     val scanDesc = q.queryExecution.executedPlan.collectLeaves().head.toString
     assert(scanDesc.contains("columns=record_id,warc_type"), s"scan was:\n$scanDesc")
@@ -207,7 +218,7 @@ class WarcSourceSpec extends SparkSpec {
     val rows = res.warcRows
       .withColumn("content", concat_ws("|", col("warc_type"), col("target_uri")))
     val dir = Files.createTempDirectory("warccrawl").toString
-    WarcSink.write(WarcSink.toRecordColumns(rows, "content"), dir)
+    writeWarc(WarcSink.toRecordColumns(rows, "content"), dir)
     val back = spark.read.format(Fmt).load(dir)
     assert(back.filter(col("warc_type") =!= "warcinfo").count() === rows.count())
     // revisit rows carry profile + truncated headers; responses do not

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.WarcSink
 
 /** WAT extraction (metadata records, WARC 1.1 §6.6): JSON envelopes that a
   * REAL parser (from_json) round-trips — titles with quotes/backslashes/
@@ -50,7 +49,7 @@ class WatSpec extends SparkSpec {
   test("WAT: envelopes parse back via from_json with exact fields and linkage") {
     val warcDir = Files.createTempDirectory("wat-src").toString
     val watDir = Files.createTempDirectory("wat-out").toString
-    WarcSink.write(htmlResponses(30), warcDir, maxRecordsPerFile = 12)
+    writeWarc(htmlResponses(30), warcDir, "maxRecordsPerFile" -> 12)
 
     graft.jobs.Wat.write(spark, warcDir, watDir)
     val wat = spark.read.format(Fmt).load(watDir).cache()

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.WarcSink
 
 /** WET extraction (conversion records, WARC 1.1 §6.8): source linkage,
   * extracted-text content, recomputed digests, determinism. */
@@ -30,7 +29,7 @@ class WetSpec extends SparkSpec {
   test("WET: conversion records link back, carry extracted text, verify clean") {
     val warcDir = Files.createTempDirectory("wet-src").toString
     val wetDir = Files.createTempDirectory("wet-out").toString
-    WarcSink.write(htmlResponses(40), warcDir, maxRecordsPerFile = 15)
+    writeWarc(htmlResponses(40), warcDir, "maxRecordsPerFile" -> 15)
 
     graft.jobs.Wet.write(spark, warcDir, wetDir)
     val wet = spark.read.format(Fmt).load(wetDir).cache()
@@ -50,7 +49,7 @@ class WetSpec extends SparkSpec {
     assert(row.getString(0) === "http://h2.example/p7")
     assert(row.getString(1) === "Page 7\nbody of page 7 & entities")
 
-    // the sink recomputed block digests over the CONVERTED text — the full
+    // the writer recomputed block digests over the CONVERTED text — the full
     // verify pass (byte-level digest recompute) must come back clean
     val verify = graft.jobs.VerifyWarc.run(spark, wetDir).collect()
     assert(verify.nonEmpty)

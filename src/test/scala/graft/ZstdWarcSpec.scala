@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{WarcIO, WarcSink}
+import graft.sources.WarcIO
 
 /** K6/K7 + the S2 codec dispatch: zstd WARC with per-record SIZED frames and
   * the skippable dictionary frame (write.go:143-153, utils.go:42-73,
@@ -29,11 +29,12 @@ class ZstdWarcSpec extends SparkSpec {
   private val Dict: Array[Byte] =
     ("WARC/1.1\r\nWARC-Record-ID: <urn:uuid:zzz>\r\nWARC-Type: response\r\n" +
       "WARC-Target-URI: http://h0.example/p zstd-payload-").getBytes("UTF-8")
+  private val DictBase64 = java.util.Base64.getEncoder.encodeToString(Dict)
 
   test("zstd round-trip: sized frames, sidecar index, member-aligned splits") {
     val dir = Files.createTempDirectory("warczstd").toString
-    WarcSink.write(sampleRows(200).coalesce(1), dir, maxRecordsPerFile = 1000,
-      compression = "zstd")
+    writeWarc(sampleRows(200).coalesce(1), dir, "maxRecordsPerFile" -> 1000,
+      "compression" -> "zstd")
     val files = new java.io.File(dir).list()
     val zst = files.filter(_.endsWith(".warc.zst"))
     assert(zst.length === 1 && files.exists(_ == zst.head + ".idx"))
@@ -66,8 +67,8 @@ class ZstdWarcSpec extends SparkSpec {
 
   test("zstd dictionary: skippable frame leads the file; dict-aware ranged scan") {
     val dir = Files.createTempDirectory("warczdict").toString
-    WarcSink.write(sampleRows(150).coalesce(1), dir, maxRecordsPerFile = 1000,
-      compression = "zstd", zstdDict = Dict)
+    writeWarc(sampleRows(150).coalesce(1), dir, "maxRecordsPerFile" -> 1000,
+      "compression" -> "zstd", "zstdDictBase64" -> DictBase64)
     val zst = new java.io.File(dir).list().filter(_.endsWith(".warc.zst")).head
     val bytes = Files.readAllBytes(Paths.get(dir, zst))
     // leading skippable frame magic 0x184D2A5D, little-endian (utils.go:55)
@@ -96,7 +97,7 @@ class ZstdWarcSpec extends SparkSpec {
     val dir = Files.createTempDirectory("warczv2").toString
     sampleRows(60).repartition(3).write.format(Fmt).mode("append")
       .option("compression", "zstd")
-      .option("zstdDictBase64", java.util.Base64.getEncoder.encodeToString(Dict))
+      .option("zstdDictBase64", DictBase64)
       .option("maxRecordsPerFile", "20")
       .save(dir)
     val files = new java.io.File(dir).list()
@@ -140,8 +141,8 @@ class ZstdWarcSpec extends SparkSpec {
 
   test("zstd mend: chopped mid-frame .open truncates at last valid frame; survivors scan") {
     val dir = Files.createTempDirectory("warczmend").toString
-    WarcSink.write(sampleRows(40).coalesce(1), dir, maxRecordsPerFile = 1000,
-      compression = "zstd", zstdDict = Dict)
+    writeWarc(sampleRows(40).coalesce(1), dir, "maxRecordsPerFile" -> 1000,
+      "compression" -> "zstd", "zstdDictBase64" -> DictBase64)
     val zst = new java.io.File(dir).list().filter(_.endsWith(".warc.zst")).head
     val path = Paths.get(dir, zst)
     val idxIn = Files.newInputStream(Paths.get(dir, zst + ".idx"))
@@ -169,8 +170,8 @@ class ZstdWarcSpec extends SparkSpec {
 
   test("IndexWarc indexes a foreign index-less .warc.zst; splits match unsplit scan") {
     val dir = Files.createTempDirectory("warczforeign").toString
-    WarcSink.write(sampleRows(120).coalesce(1), dir, maxRecordsPerFile = 1000,
-      compression = "zstd", zstdDict = Dict)
+    writeWarc(sampleRows(120).coalesce(1), dir, "maxRecordsPerFile" -> 1000,
+      "compression" -> "zstd", "zstdDictBase64" -> DictBase64)
     val zst = new java.io.File(dir).list().filter(_.endsWith(".warc.zst")).head
     val sidecarIn = Files.newInputStream(Paths.get(dir, zst + ".idx"))
     val sinkIdx = try WarcIO.readMemberIndex(sidecarIn) finally sidecarIn.close()
@@ -182,7 +183,7 @@ class ZstdWarcSpec extends SparkSpec {
     val report = graft.jobs.IndexWarc.indexAll(spark, dir).collect()
     assert(report.length === 1 && report.head.getAs[Boolean]("built"))
     assert(report.head.getAs[Long]("members") === 121)
-    // the rebuilt index reproduces the sink's own coordinates exactly
+    // the rebuilt index reproduces the writer's own coordinates exactly
     // (dictionary skippable frame excluded on both sides)
     val rebuiltIn = Files.newInputStream(Paths.get(dir, zst + ".idx"))
     val rebuilt = try WarcIO.readMemberIndex(rebuiltIn) finally rebuiltIn.close()
@@ -197,8 +198,9 @@ class ZstdWarcSpec extends SparkSpec {
     // records must shrink when every frame references the shared dict
     val dirNo = Files.createTempDirectory("warczsize0").toString
     val dirD = Files.createTempDirectory("warczsize1").toString
-    WarcSink.write(sampleRows(300).coalesce(1), dirNo, compression = "zstd")
-    WarcSink.write(sampleRows(300).coalesce(1), dirD, compression = "zstd", zstdDict = Dict)
+    writeWarc(sampleRows(300).coalesce(1), dirNo, "compression" -> "zstd")
+    writeWarc(sampleRows(300).coalesce(1), dirD,
+      "compression" -> "zstd", "zstdDictBase64" -> DictBase64)
     def dataBytes(d: String): Long = new java.io.File(d).listFiles()
       .filter(_.getName.endsWith(".warc.zst")).map(_.length()).sum
     val (noDict, withDict) = (dataBytes(dirNo), dataBytes(dirD))
