@@ -5,7 +5,7 @@ import java.io.BufferedInputStream
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{GzipMemberInputStream, SerializableHadoopConf}
+import graft.sources.{GzipMemberInputStream, SerializableHadoopConf, WarcDataWriter}
 
 /**
  * Distributed member-index builder for FOREIGN `.warc.gz` archives — ones
@@ -45,7 +45,7 @@ object IndexWarc {
   def indexFile(pathStr: String, conf: SerializableHadoopConf,
                 overwrite: Boolean = false): IndexResult = {
     val path = new HPath(pathStr)
-    val fs = path.getFileSystem(conf.value)
+    val fs = WarcDataWriter.rawFileSystem(path, conf.value)
     val idxPath = new HPath(pathStr + ".idx")
     if (!overwrite && fs.exists(idxPath))
       return IndexResult(pathStr, 0L, 0L, built = false, error = null)

@@ -1,24 +1,25 @@
 package graft.jobs
 
-import java.io.{EOFException, RandomAccessFile}
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.io.{BufferedInputStream, InputStream, RandomAccessFile}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.{GzipMemberInputStream, MemberBoundaries, WarcIO, ZstdFrames}
+
 /**
- * The `warc mend` job (A4 in SURVEY §2; reference:
- * /root/reference/mend.go:298-375): scan a (possibly crash-truncated)
- * plain `.warc[.open]` file with strict parsing and exact byte-offset
- * tracking, truncate at the end of the last fully-valid record, and strip
- * the `.open` suffix — "truncate to last valid", the file-level analog of
- * the snapshot layer's ignore-partial-manifest rule.
+ * The `warc mend` job (A4 in SURVEY §2; reference: mend.go:298-375): read a
+ * (possibly crash-truncated) `.warc[.gz|.zst][.open]` file record by record
+ * through the scan's own record grammar ([[WarcIO.readRecord]]), truncate at
+ * the end of the last fully-valid record that is also a member end, and strip
+ * the `.open` suffix — "truncate to last valid", the file-level analog of the
+ * snapshot layer's ignore-partial-manifest rule.
  *
- * Scope: PLAIN WARC files truncate at exact byte offsets; `.warc.gz` at the
- * last valid member boundary (the member-tracking decompressor re-derives
- * coordinates, read.go:50-83,319-341); `.warc.zst` at the last valid FRAME
- * boundary (ZstdFrames walker, dictionary-aware). All three validate record
- * structure up to the cut and refresh any sidecar `.idx`.
+ * A member is a record in a plain file (exact byte offsets), a gzip member
+ * in a `.warc.gz` (the member-tracking decompressor re-derives coordinates,
+ * read.go:50-83,319-341) and a frame in a `.warc.zst` ([[ZstdFrames]],
+ * dictionary-aware). Any sidecar `.idx` is refreshed to the surviving
+ * members.
  *
  * Distribution: one file = one task (`mendAll` maps the file list across the
  * cluster); mending is inherently per-file sequential, like the reference.
@@ -28,307 +29,82 @@ object Mend {
   case class MendResult(file: String, validRecords: Long, keptBytes: Long,
                         truncatedBytes: Long, renamed: Boolean, error: String)
 
-  /** Minimal buffered reader with an exact absolute offset of the next unread byte. */
-  private final class OffsetReader(raf: RandomAccessFile) {
-    private val buf = new Array[Byte](1 << 16)
-    private var bufStart = 0L // file offset of buf(0)
-    private var bufLen = 0
-    private var cur = 0 // index into buf
-    def pos: Long = bufStart + cur
-    private def fill(): Boolean = {
-      bufStart = pos
-      cur = 0
-      raf.seek(bufStart)
-      bufLen = raf.read(buf)
-      bufLen > 0
+  /** A plain file: every record is its own member, so every record end is a cut point. */
+  private final class PlainRecords(in: InputStream) extends InputStream with MemberBoundaries {
+    private var pos = 0L
+    def atMemberBoundary: Boolean = true
+    def lastMemberEndOffset: Long = pos
+    override def read(): Int = { val b = in.read(); if (b >= 0) pos += 1; b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val n = in.read(b, off, len); if (n > 0) pos += n; n
     }
-    def read(): Int = {
-      if (cur >= bufLen && !fill()) -1
-      else { val b = buf(cur) & 0xff; cur += 1; b }
-    }
-    def readLine(): String = {
-      val sb = new java.lang.StringBuilder(96)
-      var prev = -1
-      var c = read()
-      if (c == -1) return null
-      while (c != -1) {
-        if (prev == '\r' && c == '\n') {
-          sb.setLength(sb.length - 1)
-          return sb.toString
-        }
-        sb.append(c.toChar)
-        prev = c
-        c = read()
-      }
-      throw new EOFException("EOF mid-line")
-    }
-    def skipFully(n: Long): Unit = {
-      var left = n
-      while (left > 0) {
-        if (cur >= bufLen && !fill()) throw new EOFException(s"EOF in content, $left left")
-        val take = math.min(left, (bufLen - cur).toLong).toInt
-        cur += take; left -= take
-      }
-    }
+    override def close(): Unit = in.close()
   }
 
-  /** Parse one strict record; throws on any malformation (mend.go:300-335). */
-  private def readOne(r: OffsetReader): Boolean = {
-    var line = r.readLine()
-    while (line != null && line.isEmpty) line = r.readLine()
-    if (line == null) return false // clean EOF at boundary
-    if (!line.startsWith("WARC/")) throw new IllegalStateException(s"bad version: '$line'")
-    var contentLength = -1L
-    var h = r.readLine()
-    while (h != null && h.nonEmpty) {
-      val i = h.indexOf(':')
-      if (i <= 0) throw new IllegalStateException(s"bad header line: '$h'")
-      if (h.substring(0, i).equalsIgnoreCase("content-length"))
-        contentLength = h.substring(i + 1).trim.toLong
-      h = r.readLine()
-    }
-    if (contentLength < 0) throw new IllegalStateException("missing Content-Length")
-    r.skipFully(contentLength)
-    val t = Array(r.read(), r.read(), r.read(), r.read())
-    if (t.contains(-1)) throw new EOFException("EOF in trailer")
-    if (!(t(0) == '\r' && t(1) == '\n' && t(2) == '\r' && t(3) == '\n'))
-      throw new IllegalStateException("missing \\r\\n\\r\\n trailer")
-    true
-  }
-
-  /** Strict one-record skip over a decompressed stream (gzip mend path). */
-  private def skipOneStream(in: java.io.InputStream): Boolean = {
-    def readLine(): String = {
-      val sb = new java.lang.StringBuilder(96)
-      var prev = -1
-      var c = in.read()
-      if (c == -1) return null
-      while (c != -1) {
-        if (prev == '\r' && c == '\n') { sb.setLength(sb.length - 1); return sb.toString }
-        sb.append(c.toChar); prev = c; c = in.read()
-      }
-      throw new EOFException("EOF mid-line")
-    }
-    var line = readLine()
-    while (line != null && line.isEmpty) line = readLine()
-    if (line == null) return false
-    if (!line.startsWith("WARC/")) throw new IllegalStateException(s"bad version: '$line'")
-    var contentLength = -1L
-    var h = readLine()
-    while (h != null && h.nonEmpty) {
-      val i = h.indexOf(':')
-      if (i <= 0) throw new IllegalStateException(s"bad header line: '$h'")
-      if (h.substring(0, i).equalsIgnoreCase("content-length"))
-        contentLength = h.substring(i + 1).trim.toLong
-      h = readLine()
-    }
-    if (contentLength < 0) throw new IllegalStateException("missing Content-Length")
-    var left = contentLength
-    val buf = new Array[Byte](1 << 16)
-    while (left > 0) {
-      val r = in.read(buf, 0, math.min(left, buf.length.toLong).toInt)
-      if (r < 0) throw new EOFException(s"EOF in content, $left left")
-      left -= r
-    }
-    val t = Array(in.read(), in.read(), in.read(), in.read())
-    if (t.contains(-1)) throw new EOFException("EOF in trailer")
-    if (!(t(0) == '\r' && t(1) == '\n' && t(2) == '\r' && t(3) == '\n'))
-      throw new IllegalStateException("missing \\r\\n\\r\\n trailer")
-    true
-  }
-
-  /**
-   * Mend a `.warc.gz[.open]` in place: scan decompressed records while the
-   * member stream tracks exact compressed coordinates (CRC/ISIZE-verified per
-   * member); the last valid cut is the last compressed member boundary that
-   * coincides with a record boundary — the reference's lastValidEndPos over
-   * gzip (mend.go:298-375 with the read.go:319-341 member bookkeeping).
-   */
-  private def mendGzipFile(pathStr: String): MendResult = {
+  /** Mend one WARC file in place. The cut is the last member end that is
+    * also a record end (the reference's lastValidEndPos); records parsed past
+    * it are cut with it and not counted. */
+  def mendFile(pathStr: String): MendResult = {
     val path = Paths.get(pathStr)
     val size = Files.size(path)
     var records = 0L // records wholly before lastValidEnd (survive the cut)
     var provisional = 0L // parsed past the last member boundary — cut with it
     var lastValidEnd = 0L
     var err: String = null
-    val gz = new graft.sources.GzipMemberInputStream(
-      new java.io.BufferedInputStream(Files.newInputStream(path), 1 << 16))
+    val raw = new BufferedInputStream(Files.newInputStream(path), 1 << 16)
+    var in: InputStream with MemberBoundaries = null
     try {
-      try {
-        while (skipOneStream(gz)) {
-          provisional += 1
-          if (gz.atMemberBoundary) {
-            lastValidEnd = gz.lastMemberEndOffset
-            records += provisional
-            provisional = 0L
-          }
+      in =
+        if (pathStr.endsWith(".gz") || pathStr.endsWith(".gz.open")) new GzipMemberInputStream(raw)
+        else if (pathStr.endsWith(".zst") || pathStr.endsWith(".zst.open"))
+          new ZstdFrames.FrameInputStream(raw)
+        else new PlainRecords(raw)
+      lastValidEnd = in.lastMemberEndOffset // past a zstd dictionary frame
+      while (WarcIO.readRecord(in, keepContent = false) != null) {
+        provisional += 1
+        if (in.atMemberBoundary) {
+          lastValidEnd = in.lastMemberEndOffset
+          records += provisional
+          provisional = 0L
         }
-      } catch { case e: Exception =>
-        err = Option(e.getMessage).getOrElse(e.getClass.getName) }
-    } finally gz.close()
+      }
+    } catch {
+      case e: Exception => err = Option(e.getMessage).getOrElse(e.getClass.getName)
+    } finally (if (in != null) in else raw).close()
     val truncated = size - lastValidEnd
+    // Truncate only when at least one valid member exists (the reference's
+    // needsTruncate = lastValidEndPos > 0 guard): a wholly-corrupt file —
+    // e.g. a crash before the FIRST record completed — is left untouched
+    // for manual recovery, .open suffix included; truncating it to zero
+    // bytes and renaming would destroy exactly the evidence mend exists to
+    // preserve.
     if (err != null && lastValidEnd > 0 && truncated > 0) {
       val raf = new RandomAccessFile(path.toFile, "rw")
       try raf.setLength(lastValidEnd) finally raf.close()
     }
-    val renamed =
-      if (pathStr.endsWith(".open") && (err == null || lastValidEnd > 0)) {
-        Files.move(path, path.resolveSibling(path.getFileName.toString.stripSuffix(".open")))
-        true
-      } else false
+    val published = Paths.get(pathStr.stripSuffix(".open"))
+    val renamed = pathStr.endsWith(".open") && (err == null || lastValidEnd > 0)
+    if (renamed) Files.move(path, published)
+    val finalData = if (renamed) published else path
     // keep any sidecar member index consistent with the (possibly truncated,
     // possibly renamed) data file — a stale index would mis-split later scans
-    val finalData =
-      if (renamed) path.resolveSibling(path.getFileName.toString.stripSuffix(".open")) else path
-    for (idx <- Seq(Paths.get(pathStr + ".idx"),
-                    Paths.get(pathStr.stripSuffix(".open") + ".idx"))
+    for (idx <- Seq(Paths.get(pathStr + ".idx"), Paths.get(published.toString + ".idx"))
            .distinct.filter(Files.exists(_))) {
       if (err != null && lastValidEnd == 0) Files.delete(idx)
       else {
-        val in = Files.newInputStream(idx)
-        val entries = try graft.sources.WarcIO.readMemberIndex(in) finally in.close()
+        val idxIn = Files.newInputStream(idx)
+        val entries = try WarcIO.readMemberIndex(idxIn) finally idxIn.close()
         val kept = entries.filter { case (o, s) => o + s <= lastValidEnd }
         Files.delete(idx)
         val out = Files.newOutputStream(Paths.get(finalData.toString + ".idx"))
-        try graft.sources.WarcIO.writeMemberIndex(out, kept) finally out.close()
+        try WarcIO.writeMemberIndex(out, kept) finally out.close()
       }
     }
     MendResult(pathStr, records, lastValidEnd,
       if (err != null) truncated else 0L, renamed, err)
   }
 
-  /**
-   * Mend a `.warc.zst[.open]` in place: walk exact frame coordinates with
-   * [[graft.sources.ZstdFrames]] (no sidecar needed — a crashed `.open` has
-   * none), decompress each record frame (dictionary-aware: a leading
-   * skippable frame is parsed first), and validate records across frames;
-   * the cut is the last frame boundary coinciding with a record boundary.
-   */
-  private def mendZstdFile(pathStr: String): MendResult = {
-    val path = Paths.get(pathStr)
-    val size = Files.size(path)
-    var records = 0L // records in frames wholly before lastValidEnd
-    var provisional = 0L // parsed in frames past the cut — discarded with them
-    var lastValidEnd = 0L
-    var err: String = null
-    var dict: Array[Byte] = null
-    var pending = Array.emptyByteArray
-    val in = new java.io.BufferedInputStream(Files.newInputStream(path), 1 << 16)
-    try {
-      try {
-        graft.sources.ZstdFrames.frames(in).foreach { f =>
-          if (f.skippable) {
-            if (f.offset == 0L) { // the dictionary frame (utils.go:42-73)
-              dict = graft.sources.WarcIO.readZstdDictionaryFrame(
-                new java.io.ByteArrayInputStream(f.bytes))
-            }
-            if (pending.isEmpty) lastValidEnd = f.offset + f.size
-          } else {
-            // stream-decompress (frames need not pledge content size)
-            val z = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
-              new java.io.ByteArrayInputStream(f.bytes))
-            if (dict != null && dict.nonEmpty) z.setDict(dict)
-            val dec = try z.readAllBytes() finally z.close()
-            pending = if (pending.isEmpty) dec else pending ++ dec
-            // parse complete records off the pending buffer; EOF mid-record
-            // means the record continues in the NEXT frame (stay pending),
-            // malformation aborts the scan at the previous cut
-            val pin = new java.io.ByteArrayInputStream(pending)
-            var good = 0
-            var more = true
-            while (more) {
-              try {
-                more = skipOneStream(pin)
-                if (more) { provisional += 1; good = pending.length - pin.available() }
-              } catch { case _: EOFException => more = false }
-            }
-            pending = java.util.Arrays.copyOfRange(pending, good, pending.length)
-            // records fold into the committed count only when the cut
-            // advances past their frame — complete records inside a frame
-            // that still left pending bytes are discarded WITH that frame if
-            // the scan aborts here, so they must not be counted yet
-            if (pending.isEmpty) {
-              lastValidEnd = f.offset + f.size
-              records += provisional
-              provisional = 0L
-            }
-          }
-        }
-        if (pending.nonEmpty && err == null)
-          err = s"trailing partial record (${pending.length} decompressed bytes)"
-      } catch { case e: Exception =>
-        err = Option(e.getMessage).getOrElse(e.getClass.getName) }
-    } finally in.close()
-    val truncated = size - lastValidEnd
-    if (err != null && lastValidEnd > 0 && truncated > 0) {
-      val raf = new RandomAccessFile(path.toFile, "rw")
-      try raf.setLength(lastValidEnd) finally raf.close()
-    }
-    val renamed =
-      if (pathStr.endsWith(".open") && (err == null || lastValidEnd > 0)) {
-        Files.move(path, path.resolveSibling(path.getFileName.toString.stripSuffix(".open")))
-        true
-      } else false
-    val finalData =
-      if (renamed) path.resolveSibling(path.getFileName.toString.stripSuffix(".open")) else path
-    for (idx <- Seq(Paths.get(pathStr + ".idx"),
-                    Paths.get(pathStr.stripSuffix(".open") + ".idx"))
-           .distinct.filter(Files.exists(_))) {
-      if (err != null && lastValidEnd == 0) Files.delete(idx)
-      else {
-        val iin = Files.newInputStream(idx)
-        val entries = try graft.sources.WarcIO.readMemberIndex(iin) finally iin.close()
-        val kept = entries.filter { case (o, s) => o + s <= lastValidEnd }
-        Files.delete(idx)
-        val out = Files.newOutputStream(Paths.get(finalData.toString + ".idx"))
-        try graft.sources.WarcIO.writeMemberIndex(out, kept) finally out.close()
-      }
-    }
-    MendResult(pathStr, records, lastValidEnd,
-      if (err != null) truncated else 0L, renamed, err)
-  }
-
-  /** Mend one WARC file in place (plain: exact byte offsets; gzip/zstd:
-    * exact member/frame offsets via the respective framing walkers). */
-  def mendFile(pathStr: String): MendResult = {
-    val path = Paths.get(pathStr)
-    if (pathStr.endsWith(".gz") || pathStr.endsWith(".gz.open"))
-      return mendGzipFile(pathStr)
-    if (pathStr.endsWith(".zst") || pathStr.endsWith(".zst.open"))
-      return mendZstdFile(pathStr)
-    val size = Files.size(path)
-    val raf = new RandomAccessFile(path.toFile, "rw")
-    var records = 0L
-    var lastValidEnd = 0L
-    var err: String = null
-    try {
-      val r = new OffsetReader(raf)
-      try {
-        while (readOne(r)) { records += 1; lastValidEnd = r.pos }
-      } catch {
-        case e: Exception => err = Option(e.getMessage).getOrElse(e.getClass.getName)
-      }
-      val truncated = size - lastValidEnd
-      // Truncate only when at least one valid record exists (the reference's
-      // needsTruncate = lastValidEndPos > 0 guard): a wholly-corrupt file —
-      // e.g. a crash before the FIRST record completed — is left untouched
-      // for manual recovery, .open suffix included; truncating it to zero
-      // bytes and renaming would destroy exactly the evidence mend exists to
-      // preserve.
-      if (err != null && lastValidEnd > 0 && truncated > 0) raf.setLength(lastValidEnd)
-      val renamed =
-        if (pathStr.endsWith(".open") && (err == null || lastValidEnd > 0)) {
-          raf.close()
-          Files.move(path, path.resolveSibling(
-            path.getFileName.toString.stripSuffix(".open")))
-          true
-        } else false
-      MendResult(pathStr, records, lastValidEnd,
-        if (err != null) truncated else 0L, renamed, err)
-    } finally if (raf.getFD.valid()) raf.close()
-  }
-
-  /** Mend every *.warc[.gz][.open] under `dir`, one file per task. */
+  /** Mend every *.warc[.gz|.zst][.open] under `dir`, one file per task. */
   def mendAll(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import scala.jdk.CollectionConverters._

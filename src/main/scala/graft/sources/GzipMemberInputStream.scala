@@ -3,6 +3,16 @@ package graft.sources
 import java.io.{EOFException, InputStream}
 import java.util.zip.{CRC32, DataFormatException, Inflater, ZipException}
 
+/** A decompressed stream over a member-framed file: a gzip member, a zstd
+  * frame, or (for a plain file) a record. Mend reads records off it and cuts
+  * the file at the last member end that is also a record end. */
+trait MemberBoundaries {
+  /** True when every byte returned so far belongs to whole members. */
+  def atMemberBoundary: Boolean
+  /** Compressed offset just past the last member whose bytes were all returned. */
+  def lastMemberEndOffset: Long
+}
+
 /**
  * Multi-member gzip decompressor with EXACT compressed member bookkeeping —
  * the Spark-side analog of the reference's counting reader + per-member
@@ -27,7 +37,7 @@ import java.util.zip.{CRC32, DataFormatException, Inflater, ZipException}
  */
 final class GzipMemberInputStream(raw: InputStream, bufSize: Int = 1 << 16,
                                   trackMembers: Boolean = false)
-    extends InputStream {
+    extends InputStream with MemberBoundaries {
 
   final case class Member(offset: Long, size: Long)
 

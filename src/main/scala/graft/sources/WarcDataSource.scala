@@ -34,8 +34,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * Scan-level optimizations implemented natively:
  *  - column pruning (SupportsPushDownRequiredColumns): the ReadOpts
  *    "no content" scan (read.go:210-215) generalized — unneeded columns are
- *    never materialized into rows (content bytes are still consumed from the
- *    stream, as in the reference's discardN, read.go:183-198)
+ *    never materialized into rows, and without `content` the block is read
+ *    past uncopied (the reference's discardN, read.go:183-198)
  *  - filter pushdown (SupportsPushDownFilters) on warc_type / target_uri
  *    equality and IN — the ShouldSkipRecord filter (cmd/warc/utils/utils.go:43-57)
  *    evaluated record-side before row materialization
@@ -287,9 +287,10 @@ class WarcPartitionReader(part: WarcInputPartition, required: StructType,
   }
 
   private val (it, decompressor) = {
+    val keepContent = required.fieldNames.contains("content")
     val dict =
       if (part.file.endsWith(".warc.zst") && part.start > 0) zstdDictFromHead()
-      else None // start==0 ranges sniff the dict frame in-stream (WarcIO.open)
+      else None // start==0 ranges sniff the dict frame in-stream (WarcIO.openRecords)
     if (part.start > 0) stream.seek(part.start)
     val bounded = new BoundedInputStream(stream, part.length)
     dict match {
@@ -298,9 +299,8 @@ class WarcPartitionReader(part: WarcInputPartition, required: StructType,
           new java.io.BufferedInputStream(bounded, 1 << 16))
         z.setDict(d)
         val in = new java.io.BufferedInputStream(z, 1 << 16)
-        (WarcIO.decompressedRecords(in, part.start),
-          new java.io.Closeable { override def close(): Unit = in.close() })
-      case None => WarcIO.openRecords(bounded, part.start)
+        (WarcIO.decompressedRecords(in, part.start, keepContent), in)
+      case None => WarcIO.openRecords(bounded, part.start, keepContent)
     }
   }
   private var current: WarcIO.ParsedRecord = _

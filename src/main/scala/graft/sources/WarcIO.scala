@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.{BufferedInputStream, ByteArrayInputStream, EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
-import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import java.util.zip.GZIPOutputStream
 
 import scala.collection.mutable
 
@@ -29,38 +29,12 @@ object WarcIO {
   final case class ParsedRecord(
       version: String,
       headers: Map[String, String], // keys lowercased
-      content: Array[Byte],
-      ordinal: Long, // record ordinal within the scanned stream
-      memberOffset: Long, // compressed gzip-member offset (read.go:319-341); -1 when not gzip
-      memberSize: Long) // compressed gzip-member size; -1 when not gzip
+      content: Array[Byte], // null when the reader skipped the block
+      ordinal: Long = 0L, // record ordinal within the scanned stream
+      memberOffset: Long = -1L, // compressed gzip-member offset (read.go:319-341); -1 when not gzip
+      memberSize: Long = -1L) // compressed gzip-member size; -1 when not gzip
 
   private val CRLF = "\r\n".getBytes(StandardCharsets.US_ASCII)
-
-  /** Sniff the compression magic and wrap — the reference's full dispatch
-    * (read.go:358-440): gzip, bzip2, xz, zstd, and zstd with a leading
-    * skippable dictionary frame (the warc-zstd convention, utils.go:42-73 /
-    * read.go:488-535). GZIPInputStream reads concatenated members
-    * transparently (the Multistream(false) reset loop in read.go:243-254
-    * collapses to one continuous stream here); the zstd and bzip2/xz readers
-    * likewise read concatenated frames/streams to EOF. */
-  def open(in: InputStream): InputStream = {
-    val buf = new BufferedInputStream(in, 1 << 16)
-    buf.mark(6)
-    val b = Array.fill(6)(buf.read())
-    buf.reset()
-    def is(magic: Int*): Boolean = magic.zipWithIndex.forall { case (m, i) => b(i) == m }
-    if (is(0x1f, 0x8b)) new BufferedInputStream(new GZIPInputStream(buf, 1 << 16), 1 << 16)
-    else if (is(0x28, 0xb5, 0x2f, 0xfd)) zstdStream(buf, None)
-    else if ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18)
-      // skippable frame (any 0x184D2A5x magic, read.go:428-429) carrying the
-      // zstd-compressed custom dictionary; the records follow as normal frames
-      zstdStream(buf, Some(readZstdDictionaryFrame(buf)))
-    else if (is('B', 'Z', 'h'))
-      new BufferedInputStream(new BZip2CompressorInputStream(buf, true), 1 << 16)
-    else if (is(0xfd, '7', 'z', 'X', 'Z', 0x00))
-      new BufferedInputStream(new XZCompressorInputStream(buf, true), 1 << 16)
-    else buf
-  }
 
   private def zstdStream(in: InputStream, dict: Option[Array[Byte]]): InputStream = {
     val z = new ZstdInputStreamNoFinalizer(in)
@@ -131,7 +105,7 @@ object WarcIO {
     out.write(ctx.compress(bos.toByteArray))
   }
 
-  /** Read one CRLF-terminated line as ASCII/UTF-8 (readUntilDelim analog,
+  /** Read one CRLF-terminated line as UTF-8 (readUntilDelim analog,
     * read.go:140-179). Returns null at clean EOF before any byte. */
   private def readLine(in: InputStream): String = {
     val out = new java.io.ByteArrayOutputStream(128)
@@ -147,7 +121,7 @@ object WarcIO {
       prev = c
       c = in.read()
     }
-    new String(out.toByteArray, StandardCharsets.UTF_8) // EOF mid-line: tolerate
+    throw new EOFException("unexpected EOF inside a line")
   }
 
   private def readFully(in: InputStream, n: Long): Array[Byte] = {
@@ -162,106 +136,141 @@ object WarcIO {
     buf
   }
 
-  /**
-   * Pull-based record iterator (the ReadRecord loop, read.go:205-344).
-   * Tolerates leading blank lines between records; enforces the two-CRLF
-   * trailer (read.go:309-317). For gzip input the records carry exact
-   * compressed member (offset, size) — valid whenever the record starts and
-   * ends on member boundaries (gowarc framing: one member per record); any
-   * other framing degrades gracefully to (-1, -1). `baseOffset` shifts the
-   * reported offsets when scanning a byte RANGE of a larger file (the
-   * member-index split path in WarcScan).
-   */
-  def records(raw: InputStream): Iterator[ParsedRecord] = records(raw, 0L)
+  private def skipFully(in: InputStream, n: Long): Unit = {
+    var left = n
+    while (left > 0) {
+      val s = in.skip(left)
+      if (s > 0) left -= s
+      else if (in.read() < 0)
+        throw new EOFException(s"unexpected EOF in content block, $left/$n left")
+      else left -= 1
+    }
+  }
 
-  /** NOTE: the returned iterator wraps a decompressor holding a native
-    * Inflater; callers that scan many files should use [[openRecords]] and
-    * close the returned resource (closing `raw` alone does not end it). */
-  def records(raw: InputStream, baseOffset: Long): Iterator[ParsedRecord] =
-    openRecords(raw, baseOffset)._1
+  /**
+   * The WARC record grammar (ReadRecord, read.go:205-344; ISO 28500 §4) —
+   * the one parser behind the scan and mend. Reads one record off a
+   * DECOMPRESSED stream; returns null at a clean EOF between records.
+   * Leading blank lines are skipped; then a `WARC/` version line, `Key: Value`
+   * header lines up to an empty line (a line starting with SP or HT folds
+   * into the previous value, joined by one SP; any other line without a `:`
+   * past index 0 is an error), a mandatory Content-Length, the content block
+   * and an exact `\r\n\r\n` trailer (read.go:309-317). EOF anywhere inside
+   * a record is an error. With `keepContent = false` the block is read past
+   * as a Long count and `content` is null (the spool-or-skip choice,
+   * read.go:290-307), so a block over 2 GiB still parses.
+   */
+  def readRecord(in: InputStream, keepContent: Boolean): ParsedRecord = {
+    var line = readLine(in)
+    while (line != null && line.isEmpty) line = readLine(in) // inter-record padding
+    if (line == null) return null
+    if (!line.startsWith("WARC/")) throw new IllegalStateException(s"bad version line: '$line'")
+    val headers = mutable.LinkedHashMap[String, String]()
+    def headerLine(): String = {
+      val l = readLine(in)
+      if (l == null) throw new EOFException("unexpected EOF in record header")
+      l
+    }
+    var key: String = null
+    var h = headerLine()
+    while (h.nonEmpty) {
+      val i = h.indexOf(':')
+      if ((h.charAt(0) == ' ' || h.charAt(0) == '\t') && key != null)
+        headers(key) = (headers(key) + " " + h.trim).trim // folded value (LWS)
+      else if (i > 0) {
+        key = h.substring(0, i).toLowerCase
+        headers(key) = h.substring(i + 1).trim // splitKeyValue, utils.go:18-24
+      } else throw new IllegalStateException(s"bad header line: '$h'")
+      h = headerLine()
+    }
+    val len = headers.getOrElse("content-length",
+      throw new IllegalStateException("missing Content-Length")).toLong
+    if (len < 0) throw new IllegalStateException(s"negative Content-Length: $len")
+    val content = if (keepContent) readFully(in, len) else { skipFully(in, len); null }
+    val t = new Array[Byte](4)
+    var off = 0
+    while (off < 4) {
+      val r = in.read(t, off, 4 - off)
+      if (r < 0) throw new EOFException("unexpected EOF in record trailer")
+      off += r
+    }
+    if (!(t(0) == '\r' && t(1) == '\n' && t(2) == '\r' && t(3) == '\n'))
+      throw new IllegalStateException("record missing \\r\\n\\r\\n trailer")
+    ParsedRecord(line, headers.toMap, content)
+  }
 
   /** Record iterator plus the decompressor resource that owns its native
-    * buffers — close it when done (the per-partition scan path does). */
-  def openRecords(raw: InputStream, baseOffset: Long = 0L)
+    * buffers — close it when done (the per-partition scan path does).
+    * Sniffs the compression magic (read.go:358-440): gzip (per-member, with
+    * exact member coordinates — valid whenever a record starts and ends on
+    * member boundaries, gowarc framing; other framing degrades to (-1, -1)),
+    * bzip2, xz, zstd, zstd with a leading skippable dictionary frame (the
+    * warc-zstd convention, utils.go:42-73 / read.go:488-535), or plain.
+    * `baseOffset` shifts the reported offsets when scanning a byte RANGE of
+    * a larger file (the member-index split path in WarcScan). */
+  def openRecords(raw: InputStream, baseOffset: Long = 0L, keepContent: Boolean = true)
       : (Iterator[ParsedRecord], java.io.Closeable) = {
     val buf = new BufferedInputStream(raw, 1 << 16)
-    buf.mark(2)
-    val b0 = buf.read(); val b1 = buf.read()
+    buf.mark(6)
+    val b = Array.fill(6)(buf.read())
     buf.reset()
-    if (b0 == 0x1f && b1 == 0x8b) {
+    def is(magic: Int*): Boolean = magic.zipWithIndex.forall { case (m, i) => b(i) == m }
+    if (is(0x1f, 0x8b)) {
       val gz = new GzipMemberInputStream(buf)
-      (recordIterator(gz, Some(gz), baseOffset), gz)
-    } else {
-      val in = open(buf)
-      (recordIterator(in, None, baseOffset), new java.io.Closeable {
-        override def close(): Unit = in.close()
-      })
+      return (recordIterator(gz, Some(gz), baseOffset, keepContent), gz)
     }
+    val in =
+      if (is(0x28, 0xb5, 0x2f, 0xfd)) zstdStream(buf, None)
+      else if ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18)
+        // skippable frame (any 0x184D2A5x magic, read.go:428-429) carrying the
+        // zstd-compressed custom dictionary; the records follow as normal frames
+        zstdStream(buf, Some(readZstdDictionaryFrame(buf)))
+      else if (is('B', 'Z', 'h'))
+        new BufferedInputStream(new BZip2CompressorInputStream(buf, true), 1 << 16)
+      else if (is(0xfd, '7', 'z', 'X', 'Z', 0x00))
+        new BufferedInputStream(new XZCompressorInputStream(buf, true), 1 << 16)
+      else buf
+    (recordIterator(in, None, baseOffset, keepContent), in)
   }
 
   /** Record iterator over an ALREADY-DECOMPRESSED stream (no sniffing, no
     * member coordinates) — the ranged `.warc.zst` scan path builds its own
     * dictionary-aware zstd stream and feeds it here. */
-  def decompressedRecords(in: InputStream, baseOffset: Long): Iterator[ParsedRecord] =
-    recordIterator(in, None, baseOffset)
+  def decompressedRecords(in: InputStream, baseOffset: Long,
+                          keepContent: Boolean): Iterator[ParsedRecord] =
+    recordIterator(in, None, baseOffset, keepContent)
 
   private def recordIterator(in: InputStream, gz: Option[GzipMemberInputStream],
-                             baseOffset: Long): Iterator[ParsedRecord] =
+                             baseOffset: Long, keepContent: Boolean): Iterator[ParsedRecord] =
     new Iterator[ParsedRecord] {
-      private var nextRec: ParsedRecord = _
       private var ordinal = 0L
-      private var done = false
+      private var nextRec = advance()
 
-      private def advance(): Unit = {
-        if (done) return
+      private def advance(): ParsedRecord = {
         val startsAtBoundary = gz.exists(_.atMemberBoundary)
         val memberStart = gz.map(_.nextByteOffset).getOrElse(-1L)
-        var line = readLine(in)
-        while (line != null && line.isEmpty) line = readLine(in) // skip inter-record padding
-        if (line == null) { done = true; nextRec = null; return }
-        if (!line.startsWith("WARC/")) throw new IllegalStateException(s"bad version line: '$line'")
-        val version = line
-        val headers = mutable.LinkedHashMap[String, String]()
-        var h = readLine(in)
-        while (h != null && h.nonEmpty) {
-          val i = h.indexOf(':')
-          if (i > 0) headers(h.substring(0, i).toLowerCase) = h.substring(i + 1).trim // splitKeyValue, utils.go:18-24
-          h = readLine(in)
-        }
-        val len = headers.getOrElse("content-length",
-          throw new IllegalStateException("missing Content-Length")).toLong
-        val content = readFully(in, len)
-        // trailer: exactly \r\n\r\n (read.go:309-317)
-        val t = new Array[Byte](4)
-        var off = 0
-        while (off < 4) {
-          val r = in.read(t, off, 4 - off)
-          if (r < 0) throw new EOFException("unexpected EOF in record trailer")
-          off += r
-        }
-        if (!(t(0) == '\r' && t(1) == '\n' && t(2) == '\r' && t(3) == '\n'))
-          throw new IllegalStateException("record missing \\r\\n\\r\\n trailer")
+        val r = readRecord(in, keepContent)
+        if (r == null) return null
         val (mo, ms) = gz match {
           case Some(g) if startsAtBoundary && g.atMemberBoundary && g.lastMemberEndOffset > memberStart =>
             (baseOffset + memberStart, g.lastMemberEndOffset - memberStart)
           case _ => (-1L, -1L)
         }
-        nextRec = ParsedRecord(version, headers.toMap, content, ordinal, mo, ms)
         ordinal += 1
+        r.copy(ordinal = ordinal - 1, memberOffset = mo, memberSize = ms)
       }
 
-      advance()
       override def hasNext: Boolean = nextRec != null
       override def next(): ParsedRecord = {
-        val r = nextRec; advance(); r
+        val r = nextRec; nextRec = advance(); r
       }
     }
 
-  /** Sidecar member index: one `offset size` line per gzip member, written
-    * by WarcSink next to each rotated `.warc.gz` — what makes the archive
-    * splittable at member granularity without a planning-time scan (the
-    * reference validates exactly these coordinates against an external
-    * member finder, read_test.go:345-401). */
+  /** Sidecar member index: one `offset size` line per gzip member or zstd
+    * frame, written by WarcDataWriter next to each rotated `.warc.gz` /
+    * `.warc.zst` — what makes the archive splittable at member granularity
+    * without a planning-time scan (the reference validates exactly these
+    * coordinates against an external member finder, read_test.go:345-401). */
   def writeMemberIndex(out: OutputStream, members: Seq[(Long, Long)]): Unit = {
     val sb = new StringBuilder
     members.foreach { case (o, s) => sb.append(o).append(' ').append(s).append('\n') }
@@ -277,9 +286,20 @@ object WarcIO {
   /** Serialize one record; canonical header order per RecordSerializer.
     * Content-Length is ALWAYS set from the measured content (the reference
     * measures the spooled block at write time, write.go:84-90) — a caller-
-    * provided value that disagrees would produce an unreadable record. */
+    * provided value that disagrees would produce an unreadable record.
+    * Header names and values reach the file verbatim, so a name that is
+    * empty, holds `:`, CR or LF, or starts with SP/HT, and a value holding
+    * CR or LF, are rejected: they would forge headers (a crawled URL with an
+    * embedded CRLF) or write a record the reader cuts. */
   def writeRecord(out: OutputStream, version: String,
                   headersIn: Seq[(String, String)], content: Array[Byte]): Unit = {
+    headersIn.foreach { case (k, v) =>
+      def shown(x: String) = x.replace("\r", "\\r").replace("\n", "\\n")
+      require(k.nonEmpty && !k.exists(c => c == ':' || c == '\r' || c == '\n') &&
+        k.charAt(0) != ' ' && k.charAt(0) != '\t', s"invalid WARC header name '${shown(k)}'")
+      require(!v.exists(c => c == '\r' || c == '\n'),
+        s"WARC header '${shown(k)}' has CR or LF in its value '${shown(v)}'")
+    }
     val withLen = headersIn.filterNot(_._1.equalsIgnoreCase("Content-Length")) :+
       ("Content-Length" -> content.length.toString)
     // block digest injected when missing (write.go:96-101); an existing

@@ -3,7 +3,8 @@ package graft.sources
 import java.io.BufferedOutputStream
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, Path => HPath}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -189,14 +190,7 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
     "headers column must be map<string,string>")
 
   private val dirPath = new HPath(dir)
-  // raw bytes only: a checksummed local filesystem would add `.crc` sidecars
-  // that go stale when Mend truncates a file or rewrites its `.idx` in place,
-  // failing later scans; WARC records carry their own digests and every
-  // gzip member / zstd frame its own checksum
-  private val fs = dirPath.getFileSystem(conf.value) match {
-    case c: ChecksumFileSystem => c.getRawFileSystem
-    case other => other
-  }
+  private val fs = WarcDataWriter.rawFileSystem(dirPath, conf.value)
   fs.mkdirs(dirPath) // idempotent
 
   private val ext = WarcDataWriter.extOf(codec)
@@ -304,6 +298,17 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
 }
 
 object WarcDataWriter {
+  /** The filesystem WARC files and their `.idx` sidecars are written through:
+    * raw bytes only. A checksummed local filesystem would add `.crc` sidecars
+    * that go stale when Mend truncates a file or rewrites its `.idx` in
+    * place, failing later scans; WARC records carry their own digests and
+    * every gzip member / zstd frame its own checksum. */
+  private[graft] def rawFileSystem(path: HPath, conf: Configuration): FileSystem =
+    path.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+
   private[sources] def extOf(codec: String): String = codec match {
     case "gzip" => "warc.gz"
     case "zstd" => "warc.zst"

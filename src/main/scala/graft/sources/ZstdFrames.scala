@@ -127,4 +127,63 @@ object ZstdFrames {
         f
       }
     }
+
+  /** The decompressed records of a `.warc.zst`, one frame at a time, for
+    * mend: a leading skippable frame is the dictionary (read at
+    * construction, so [[lastMemberEndOffset]] starts past it), later
+    * skippable frames carry no bytes, and the next frame is walked only when
+    * the current one is drained — a truncated tail frame fails after every
+    * byte before it was returned. */
+  final class FrameInputStream(raw: InputStream) extends InputStream with MemberBoundaries {
+    private val it = frames(raw).buffered
+    private var buf = Array.emptyByteArray
+    private var pos = 0
+    private var prevEnd = 0L // end of the frame before the current one
+    private var curEnd = 0L // end of the current frame
+    private val dict: Array[Byte] =
+      if (!it.hasNext || !it.head.skippable) null
+      else {
+        val f = it.next()
+        curEnd = f.offset + f.size
+        WarcIO.readZstdDictionaryFrame(new java.io.ByteArrayInputStream(f.bytes))
+      }
+
+    def atMemberBoundary: Boolean = pos == buf.length
+    def lastMemberEndOffset: Long = if (atMemberBoundary) curEnd else prevEnd
+
+    /** Step to the next frame with bytes; false at the end of the file. */
+    private def nextFrame(): Boolean = {
+      while (pos == buf.length) {
+        if (!it.hasNext) return false
+        val f = it.next()
+        prevEnd = curEnd
+        curEnd = f.offset + f.size
+        pos = 0
+        buf =
+          if (f.skippable) Array.emptyByteArray
+          else {
+            // stream-decompress: frames need not pledge their content size
+            val z = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
+              new java.io.ByteArrayInputStream(f.bytes))
+            if (dict != null && dict.nonEmpty) z.setDict(dict)
+            try z.readAllBytes() finally z.close()
+          }
+      }
+      true
+    }
+
+    override def read(): Int =
+      if (!nextFrame()) -1 else { val b = buf(pos) & 0xff; pos += 1; b }
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      if (len == 0) return 0
+      if (!nextFrame()) return -1
+      val n = math.min(len, buf.length - pos)
+      System.arraycopy(buf, pos, b, off, n)
+      pos += n
+      n
+    }
+
+    override def close(): Unit = raw.close()
+  }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.jobs.Mend
 
 /** A4 mend semantics: truncate-at-last-valid + .open rename (mend.go:298-375),
-  * plain files by byte offset, gzip files by exact compressed member offset. */
+  * plain files by byte offset, gzip and zstd files by exact compressed
+  * member / frame offset. */
 class MendSpec extends SparkSpec {
 
   private def writeFile(dir: String, n: Int, gzip: Boolean): Unit = {
@@ -161,9 +162,9 @@ class MendSpec extends SparkSpec {
     assert(again.error == null && again.validRecords === 1)
   }
 
-  test("property: a chop at ANY byte mends to a cleanly-scanning prefix (gzip + zstd)") {
+  test("property: a chop at ANY byte mends to a cleanly-scanning prefix (plain, gzip, zstd)") {
     import org.apache.spark.sql.functions._
-    for (codec <- Seq("gzip", "zstd")) {
+    for (codec <- Seq("none", "gzip", "zstd")) {
       val dir = Files.createTempDirectory(s"mendprop$codec").toString
       val rows = spark.range(25).select(
         lit("WARC/1.1").as("version"),
@@ -173,20 +174,26 @@ class MendSpec extends SparkSpec {
         concat(lit("payload-"), col("id").cast("string"),
           lit("-"), repeat(lit("z"), 64)).cast("string").as("content"))
       writeWarc(rows.coalesce(1), dir, "compression" -> codec)
-      val ext = if (codec == "gzip") ".warc.gz" else ".warc.zst"
+      val ext = Map("none" -> ".warc", "gzip" -> ".warc.gz", "zstd" -> ".warc.zst")(codec)
       val f = new java.io.File(dir).list().find(_.endsWith(ext)).get
       val intact = Files.readAllBytes(Paths.get(dir, f))
+      // a plain file chopped exactly at a record end is a clean, shorter file
+      val text = new String(intact, "ISO-8859-1")
+      def atRecordEnd(chop: Int) = codec == "none" && text.startsWith("WARC/", chop)
       // deterministic chop points across the whole file, incl. very early
-      // (inside the warcinfo member) and just-before-end
+      // (inside the warcinfo member), just-before-end and, for plain, the
+      // first record end
       val chops = Seq(3, 40) ++ (1 to 9).map(i => intact.length * i / 10) ++
-        Seq(intact.length - 1)
+        Seq(intact.length - 1) ++ (if (codec == "none") Seq(text.indexOf("WARC/", 1)) else Nil)
       for (chop <- chops) {
         val cdir = Files.createTempDirectory(s"chop$codec$chop")
         val open = cdir.resolve(s"C-0-x$ext.open")
         Files.write(open, java.util.Arrays.copyOf(intact, chop))
         val r = Mend.mendFile(open.toString)
-        // a chop strictly inside the byte stream must register as damage
-        assert(r.error != null, s"$codec chop=$chop silently clean")
+        if (atRecordEnd(chop))
+          assert(r.error == null && r.keptBytes === chop, s"$codec chop=$chop $r")
+        // a chop strictly inside a record must register as damage
+        else assert(r.error != null, s"$codec chop=$chop silently clean")
         assert(r.keptBytes <= chop)
         if (r.keptBytes > 0) {
           val mended = cdir.resolve(s"C-0-x$ext")
@@ -202,6 +209,33 @@ class MendSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  test("a folded header line (WARC 1.1 LWS continuation) is valid: mend keeps every byte") {
+    val p = Files.createTempDirectory("mendfold").resolve("f.warc")
+    val folded = "WARC/1.1\r\nWARC-Type: resource\r\nX-Folded: first\r\n \tsecond\r\n" +
+      "Content-Length: 5\r\n\r\nhello\r\n\r\n"
+    val bytes = recBytes(1) ++ folded.getBytes("US-ASCII")
+    Files.write(p, bytes)
+    val r = Mend.mendFile(p.toString)
+    assert(r.error == null && r.validRecords === 2 && r.keptBytes === bytes.length, r.toString)
+    assert(Files.readAllBytes(p) === bytes)
+  }
+
+  test("IndexWarc then Mend leaves no stale .crc: the mended archive scans cleanly") {
+    val dir = Files.createTempDirectory("mendcrc").toString
+    writeFile(dir, 8, gzip = true)
+    val f = new java.io.File(dir).list().find(_.endsWith(".warc.gz")).get
+    val p = Paths.get(dir, f)
+    Files.delete(Paths.get(p.toString + ".idx")) // a foreign, index-less archive
+    assert(graft.jobs.IndexWarc.indexAll(spark, dir).collect().head.getAs[Boolean]("built"))
+    val bytes = Files.readAllBytes(p)
+    Files.write(p, java.util.Arrays.copyOf(bytes, bytes.length - 20)) // chop mid-member
+    val r = Mend.mendFile(p.toString) // rewrites the built .idx in place
+    assert(r.error != null && r.validRecords === 8) // warcinfo + 7 whole records
+    val back = spark.read.format("graft.sources.WarcDataSource").load(dir)
+    assert(back.count() === r.validRecords)
+    assert(!new java.io.File(dir).list().exists(_.endsWith(".crc")))
   }
 
   test("mendAll distributes across files (plain and gzip)") {

@@ -70,8 +70,9 @@ class SnapshotSpec extends SparkSpec with GenHelpers {
     checkAll(Gen.zip(hdrGen, contentGen), n = 200) { case (hdrs, content) =>
       val bos = new java.io.ByteArrayOutputStream()
       graft.sources.WarcIO.writeRecord(bos, "WARC/1.1", hdrs, content)
-      val recs = graft.sources.WarcIO.records(
-        new java.io.ByteArrayInputStream(bos.toByteArray)).toList
+      val (it, in) = graft.sources.WarcIO.openRecords(
+        new java.io.ByteArrayInputStream(bos.toByteArray))
+      val recs = try it.toList finally in.close()
       assert(recs.length === 1)
       assert(recs.head.version === "WARC/1.1")
       assert(java.util.Arrays.equals(recs.head.content, content))
@@ -93,8 +94,9 @@ class SnapshotSpec extends SparkSpec with GenHelpers {
             s"content-$i".getBytes)
         }
       }
-      val recs = graft.sources.WarcIO.records(
-        new java.io.ByteArrayInputStream(bos.toByteArray)).toList
+      val (it, in) = graft.sources.WarcIO.openRecords(
+        new java.io.ByteArrayInputStream(bos.toByteArray))
+      val recs = try it.toList finally in.close()
       assert(recs.length === n)
       recs.zipWithIndex.foreach { case (r, i) =>
         assert(new String(r.content) === s"content-$i")

@@ -164,16 +164,27 @@ class WarcSourceSpec extends SparkSpec {
     def failing(parts: Int) = sampleRows(60).coalesce(1).repartition(parts)
       .withColumn("content", when(col("headers")("WARC-Record-ID") === "<urn:uuid:r45>",
         raise_error(lit("planted row failure"))).otherwise(col("content")))
+    // a CR/LF in a late row's header would forge headers: the writer
+    // rejects the row, naming the header
+    val forgedValue = sampleRows(60).coalesce(1).withColumn("headers",
+      transform_values(col("headers"), (k, v) =>
+        when(k === "WARC-Target-URI" && v === "http://h0.example/p45",
+          concat(v, lit("\r\nWARC-Type: revisit"))).otherwise(v)))
+    val forgedName = sampleRows(60).coalesce(1).withColumn("headers",
+      map_concat(col("headers"), map(lit("X-A\r\nWARC-Type"), lit("revisit"))))
     // one partition: the task's DataWriter.abort; two: the other task may
     // already have committed, so the job's BatchWrite.abort must clean it up
-    for (parts <- Seq(1, 2)) {
+    for ((df, cause) <- Seq(failing(1) -> "planted row failure",
+                            failing(2) -> "planted row failure",
+                            forgedValue -> "WARC header 'WARC-Target-URI'",
+                            forgedName -> "invalid WARC header name 'X-A\\r\\nWARC-Type'")) {
       val dir = Files.createTempDirectory("warcabort").toString
-      val e = intercept[Exception](writeWarc(failing(parts), dir, "maxRecordsPerFile" -> 10))
+      val e = intercept[Exception](writeWarc(df, dir, "maxRecordsPerFile" -> 10))
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains("planted row failure")))
+        .exists(t => String.valueOf(t.getMessage).contains(cause)), e.toString)
       // no published .warc*/.idx file and no *.open.* attempt file
       val left = new java.io.File(dir).list().toSeq
-      assert(left.isEmpty, s"$parts partition(s) left: ${left.mkString(", ")}")
+      assert(left.isEmpty, s"$cause left: ${left.mkString(", ")}")
     }
   }
 
@@ -184,6 +195,16 @@ class WarcSourceSpec extends SparkSpec {
     assert(back.count() === 11) // 10 records + the file's warcinfo
     val h = back.select("headers").head().getAs[Map[String, String]](0)
     assert(h.contains("warc-type")) // lowercased keys (header.go:12-38 semantics)
+  }
+
+  test("a folded header line (WARC 1.1 LWS continuation) joins its value with one SP") {
+    val dir = Files.createTempDirectory("warcfold")
+    Files.write(dir.resolve("f.warc"), ("WARC/1.1\r\nWARC-Type: resource\r\n" +
+      "X-Folded: first\r\n \tsecond\r\nContent-Length: 5\r\n\r\nhello\r\n\r\n")
+      .getBytes("US-ASCII"))
+    val h = spark.read.format(Fmt).load(dir.toString)
+      .select("headers").head().getAs[Map[String, String]](0)
+    assert(h("x-folded") === "first second" && h("warc-type") === "resource")
   }
 
   test("filter pushdown on warc_type reaches the scan; results correct") {
