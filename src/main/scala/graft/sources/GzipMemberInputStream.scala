@@ -3,9 +3,10 @@ package graft.sources
 import java.io.{EOFException, InputStream}
 import java.util.zip.{CRC32, DataFormatException, Inflater, ZipException}
 
-/** A decompressed stream over a member-framed file: a gzip member, a zstd
-  * frame, or (for a plain file) a record. Mend reads records off it and cuts
-  * the file at the last member end that is also a record end. */
+/** A decompressed WARC stream that knows its compressed member framing: a
+  * gzip member, a zstd frame, or (for a plain file) a record. [[WarcIO.open]]
+  * returns one for every codec; [[WarcIO.MemberWalk]] reads records off it and
+  * finds the cut points — member ends that are also record ends. */
 trait MemberBoundaries {
   /** True when every byte returned so far belongs to whole members. */
   def atMemberBoundary: Boolean
@@ -35,21 +36,17 @@ trait MemberBoundaries {
  * (FHCRC) is verified when present — a corrupt tail or header fails loudly
  * at the exact member, never as garbled WARC text downstream.
  */
-final class GzipMemberInputStream(raw: InputStream, bufSize: Int = 1 << 16,
-                                  trackMembers: Boolean = false)
-    extends InputStream with MemberBoundaries {
-
-  final case class Member(offset: Long, size: Long)
+final class GzipMemberInputStream(raw: InputStream) extends InputStream with MemberBoundaries {
 
   // ---- compressed-side buffer: absolute offset of inBuf(bufStart) == fileOff
-  private val inBuf = new Array[Byte](bufSize)
+  private val inBuf = new Array[Byte](1 << 16)
   private var bufStart = 0
   private var bufEnd = 0
   private var fileOff = 0L
   private var rawEof = false
 
   // ---- decompressed-side buffer (never crosses a member boundary)
-  private val outBuf = new Array[Byte](bufSize)
+  private val outBuf = new Array[Byte](1 << 16)
   private var outStart = 0
   private var outEnd = 0
 
@@ -61,22 +58,11 @@ final class GzipMemberInputStream(raw: InputStream, bufSize: Int = 1 << 16,
   private var finished = false
   private var curMemberStart = 0L
   private var _lastMemberEnd = 0L
-  private val _members = scala.collection.mutable.Buffer[Member]()
-
-  /** All fully-consumed member coordinates so far (offset, compressed size).
-    * Recorded only when `trackMembers` — a million-member archive would
-    * otherwise accumulate the whole index in task memory; the scan and mend
-    * paths need only the RUNNING coordinates below. */
-  def members: Seq[Member] = _members.toSeq
 
   /** True when every byte returned so far belongs to fully-consumed members —
     * i.e. the next byte (if any) starts a new member. Valid only between
     * reads that drained the output buffer. */
   def atMemberBoundary: Boolean = !inMember && outStart == outEnd
-
-  /** Compressed offset of the next unparsed byte (== next member's start
-    * when [[atMemberBoundary]]). */
-  def nextByteOffset: Long = fileOff
 
   /** Compressed offset just past the last fully-consumed member. */
   def lastMemberEndOffset: Long = _lastMemberEnd
@@ -177,7 +163,6 @@ final class GzipMemberInputStream(raw: InputStream, bufSize: Int = 1 << 16,
     consume(8)
     inMember = false
     _lastMemberEnd = fileOff
-    if (trackMembers) _members += Member(curMemberStart, fileOff - curMemberStart)
   }
 
   /** Inflate into outBuf; stops at member end (trailer consumed eagerly). */

@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Split planning: paths resolve through the Hadoop FileSystem API (recursive
  * listing — a 100 TB archive lives on object storage, not java.nio), and a
- * `.warc.gz` that carries the sink's sidecar member index splits into
+ * `.warc.gz` / `.warc.zst` that carries a sidecar member index splits into
  * MEMBER-RANGE partitions of ~`maxPartitionBytes` (default 128 MiB): each
  * task seeks to an exact member offset and reads only its range. Files
  * without an index scan as one partition each (still correct — gowarc's own
@@ -40,7 +40,10 @@ import org.apache.spark.unsafe.types.UTF8String
  *    equality and IN — the ShouldSkipRecord filter (cmd/warc/utils/utils.go:43-57)
  *    evaluated record-side before row materialization
  *  - per-record compressed member coordinates surface as `member_offset` /
- *    `member_size` (read.go:319-341; -1 outside gzip framing)
+ *    `member_size` (read.go:319-341): the gzip member(s), zstd frame(s) or
+ *    plain byte range of a record that starts and ends at a member end
+ *    ([[WarcIO.MemberWalk]]); -1 for a record sharing a member with another
+ *    and for bzip2/xz
  */
 class WarcDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = WarcTable.Schema
@@ -131,8 +134,9 @@ object WarcScan {
   val FilterableCols: Set[String] = Set("warc_type", "target_uri", "record_id")
   val DefaultSplit: Long = 128L * 1024 * 1024
 
-  /** Recursive WARC-file listing (archives nest by date/host); `.open`
-    * in-progress files are naturally excluded by the extension filter.
+  /** Recursive WARC-file listing (archives nest by date/host) of the names
+    * `accept` takes — by default the published data files, so `.open`
+    * in-progress files are excluded.
     *
     * Uses per-directory `listStatus` rather than `listFiles(recursive)`:
     * the latter materializes LocatedFileStatus EAGERLY (on local FS that
@@ -140,7 +144,8 @@ object WarcScan {
     * mid-iteration crashes the listing — the streaming source lists
     * CONCURRENTLY with active writers by design. A directory vanishing
     * mid-walk is likewise tolerated. */
-  def listWarcFiles(fs: FileSystem, root: HPath): Seq[FileStatus] = {
+  def listWarcFiles(fs: FileSystem, root: HPath,
+                    accept: String => Boolean = WarcFileName.isData): Seq[FileStatus] = {
     val rootSt = fs.getFileStatus(root)
     if (!rootSt.isDirectory) return Seq(rootSt)
     val buf = scala.collection.mutable.Buffer[FileStatus]()
@@ -150,11 +155,7 @@ object WarcScan {
         catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
       entries.foreach { st =>
         if (st.isDirectory) walk(st.getPath)
-        else {
-          val n = st.getPath.getName
-          if (n.endsWith(".warc") || n.endsWith(".warc.gz") || n.endsWith(".warc.zst") ||
-            n.endsWith(".warc.bz2") || n.endsWith(".warc.xz")) buf += st
-        }
+        else if (accept(st.getPath.getName)) buf += st
       }
     }
     walk(root)
@@ -167,10 +168,9 @@ object WarcScan {
                     maxPartitionBytes: Long): Array[InputPartition] =
     files.flatMap { st =>
       val f = st.getPath
-      val idxPath = new HPath(f.toString + ".idx")
-      val framed = f.getName.endsWith(".warc.gz") || f.getName.endsWith(".warc.zst")
+      val idxPath = new HPath(WarcFileName.idxOf(f.toString))
       val members: Option[Seq[(Long, Long)]] =
-        if (framed && fs.exists(idxPath)) {
+        if (WarcFileName.isFramed(f.getName) && fs.exists(idxPath)) {
           val in = fs.open(idxPath)
           try Some(WarcIO.readMemberIndex(in)) finally in.close()
         } else None
@@ -264,44 +264,12 @@ class WarcPartitionReader(part: WarcInputPartition, required: StructType,
   private val fs = hfile.getFileSystem(conf.value)
   private val stream = fs.open(hfile)
 
-  /** A ranged read of a dictionary-compressed `.warc.zst` starts mid-file,
-    * past the leading skippable dictionary frame — probe the file HEAD for
-    * the frame (positioned read; the main pointer is untouched) and load the
-    * dictionary the range's frames were compressed against. */
-  private def zstdDictFromHead(): Option[Array[Byte]] = {
-    val head = new Array[Byte](4)
-    // positioned reads may return SHORT on some connectors: loop to 4 bytes
-    // (a short read treated as "no dict" would silently decode dictionary
-    // frames without the dictionary)
-    var got = 0
-    var eof = false
-    while (got < 4 && !eof) {
-      val n = stream.read(got.toLong, head, got, 4 - got)
-      if (n < 0) eof = true else got += n
-    }
-    if (got == 4 && (head(0) & 0xf0) == 0x50 && head(1) == 0x2a &&
-        head(2) == 0x4d && head(3) == 0x18) {
-      val s2 = fs.open(hfile)
-      try Some(WarcIO.readZstdDictionaryFrame(s2)) finally s2.close()
-    } else None
-  }
-
   private val (it, decompressor) = {
-    val keepContent = required.fieldNames.contains("content")
-    val dict =
-      if (part.file.endsWith(".warc.zst") && part.start > 0) zstdDictFromHead()
-      else None // start==0 ranges sniff the dict frame in-stream (WarcIO.openRecords)
+    // a range past the file head may need the dictionary the head carries
+    val dict = if (part.start > 0) WarcIO.headDictionary(fs.open(hfile)) else null
     if (part.start > 0) stream.seek(part.start)
-    val bounded = new BoundedInputStream(stream, part.length)
-    dict match {
-      case Some(d) =>
-        val z = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
-          new java.io.BufferedInputStream(bounded, 1 << 16))
-        z.setDict(d)
-        val in = new java.io.BufferedInputStream(z, 1 << 16)
-        (WarcIO.decompressedRecords(in, part.start, keepContent), in)
-      case None => WarcIO.openRecords(bounded, part.start, keepContent)
-    }
+    WarcIO.openRecords(new BoundedInputStream(stream, part.length), part.start,
+      keepContent = required.fieldNames.contains("content"), dict)
   }
   private var current: WarcIO.ParsedRecord = _
 

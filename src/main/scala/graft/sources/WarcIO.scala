@@ -1,12 +1,12 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, ByteArrayInputStream, EOFException, InputStream, OutputStream}
+import java.io.{BufferedInputStream, EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
 
 import scala.collection.mutable
 
-import com.github.luben.zstd.{ZstdCompressCtx, ZstdInputStreamNoFinalizer}
+import com.github.luben.zstd.ZstdCompressCtx
 import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
 import org.apache.commons.compress.compressors.xz.XZCompressorInputStream
 
@@ -31,37 +31,13 @@ object WarcIO {
       headers: Map[String, String], // keys lowercased
       content: Array[Byte], // null when the reader skipped the block
       ordinal: Long = 0L, // record ordinal within the scanned stream
-      memberOffset: Long = -1L, // compressed gzip-member offset (read.go:319-341); -1 when not gzip
-      memberSize: Long = -1L) // compressed gzip-member size; -1 when not gzip
+      memberOffset: Long = -1L, // compressed offset of the record's members (read.go:319-341), see MemberWalk
+      memberSize: Long = -1L) // compressed size of the record's members; -1 when not framed alone
 
   private val CRLF = "\r\n".getBytes(StandardCharsets.US_ASCII)
 
-  private def zstdStream(in: InputStream, dict: Option[Array[Byte]]): InputStream = {
-    val z = new ZstdInputStreamNoFinalizer(in)
-    dict.foreach(z.setDict)
-    // NoFinalizer: the native DCtx frees on close() — the scan path closes
-    // its decompressor per partition (WarcPartitionReader.close)
-    new BufferedInputStream(z, 1 << 16)
-  }
-
   /** Magic of the skippable frame carrying the dictionary (utils.go:55). */
   val ZstdDictionaryFrameMagic: Long = 0x184D2A5DL
-
-  /** Parse the leading skippable dictionary frame (8-byte header: LE magic +
-    * LE payload size; payload = zstd-compressed dictionary) and return the
-    * DECOMPRESSED dictionary (read.go:488-535). Consumes exactly the frame. */
-  def readZstdDictionaryFrame(in: InputStream): Array[Byte] = {
-    val header = readFully(in, 8)
-    def le32(off: Int): Long =
-      ((header(off) & 0xffL)) | ((header(off + 1) & 0xffL) << 8) |
-        ((header(off + 2) & 0xffL) << 16) | ((header(off + 3) & 0xffL) << 24)
-    val magic = le32(0)
-    require((magic & 0xfffffff0L) == 0x184D2A50L,
-      f"not a zstd skippable frame: magic $magic%08x")
-    val payload = readFully(in, le32(4))
-    val z = new ZstdInputStreamNoFinalizer(new ByteArrayInputStream(payload))
-    try z.readAllBytes() finally z.close()
-  }
 
   /** Write the skippable dictionary frame (utils.go:42-73): LE magic
     * 0x184D2A5D + LE payload size + zstd-compressed dictionary. Returns the
@@ -199,72 +175,109 @@ object WarcIO {
     ParsedRecord(line, headers.toMap, content)
   }
 
-  /** Record iterator plus the decompressor resource that owns its native
-    * buffers — close it when done (the per-partition scan path does).
-    * Sniffs the compression magic (read.go:358-440): gzip (per-member, with
-    * exact member coordinates — valid whenever a record starts and ends on
-    * member boundaries, gowarc framing; other framing degrades to (-1, -1)),
-    * bzip2, xz, zstd, zstd with a leading skippable dictionary frame (the
-    * warc-zstd convention, utils.go:42-73 / read.go:488-535), or plain.
-    * `baseOffset` shifts the reported offsets when scanning a byte RANGE of
-    * a larger file (the member-index split path in WarcScan). */
-  def openRecords(raw: InputStream, baseOffset: Long = 0L, keepContent: Boolean = true)
-      : (Iterator[ParsedRecord], java.io.Closeable) = {
+  /** The one codec opener (read.go:358-440): sniffs the magic bytes once and
+    * returns the decompressed stream with its member framing — gzip members
+    * ([[GzipMemberInputStream]]), zstd frames with or without a leading
+    * skippable dictionary frame (the warc-zstd convention, utils.go:42-73 /
+    * read.go:488-535; [[ZstdFrames.FrameInputStream]]), or plain records.
+    * bzip2 and xz decompress as one stream that is never at a member
+    * boundary. A ranged read of a dictionary-compressed `.warc.zst` starts
+    * past the dictionary frame and passes the file's dictionary as `dict`. */
+  def open(raw: InputStream, dict: Array[Byte] = null): InputStream with MemberBoundaries = {
     val buf = new BufferedInputStream(raw, 1 << 16)
     buf.mark(6)
     val b = Array.fill(6)(buf.read())
     buf.reset()
     def is(magic: Int*): Boolean = magic.zipWithIndex.forall { case (m, i) => b(i) == m }
-    if (is(0x1f, 0x8b)) {
-      val gz = new GzipMemberInputStream(buf)
-      return (recordIterator(gz, Some(gz), baseOffset, keepContent), gz)
-    }
-    val in =
-      if (is(0x28, 0xb5, 0x2f, 0xfd)) zstdStream(buf, None)
-      else if ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18)
-        // skippable frame (any 0x184D2A5x magic, read.go:428-429) carrying the
-        // zstd-compressed custom dictionary; the records follow as normal frames
-        zstdStream(buf, Some(readZstdDictionaryFrame(buf)))
-      else if (is('B', 'Z', 'h'))
-        new BufferedInputStream(new BZip2CompressorInputStream(buf, true), 1 << 16)
-      else if (is(0xfd, '7', 'z', 'X', 'Z', 0x00))
-        new BufferedInputStream(new XZCompressorInputStream(buf, true), 1 << 16)
-      else buf
-    (recordIterator(in, None, baseOffset, keepContent), in)
+    if (is(0x1f, 0x8b)) new GzipMemberInputStream(buf)
+    // any skippable frame 0x184D2A5x (read.go:428-429) leads with the dictionary
+    else if (is(0x28, 0xb5, 0x2f, 0xfd) ||
+        ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18))
+      new ZstdFrames.FrameInputStream(buf, dict)
+    else if (is('B', 'Z', 'h')) new Unframed(new BZip2CompressorInputStream(buf, true))
+    else if (is(0xfd, '7', 'z', 'X', 'Z', 0x00)) new Unframed(new XZCompressorInputStream(buf, true))
+    else new PlainRecords(buf)
   }
 
-  /** Record iterator over an ALREADY-DECOMPRESSED stream (no sniffing, no
-    * member coordinates) — the ranged `.warc.zst` scan path builds its own
-    * dictionary-aware zstd stream and feeds it here. */
-  def decompressedRecords(in: InputStream, baseOffset: Long,
-                          keepContent: Boolean): Iterator[ParsedRecord] =
-    recordIterator(in, None, baseOffset, keepContent)
+  /** The dictionary a ranged read needs, probed from the file head (`head`
+    * reads the file from offset 0): the dictionary of a `.warc.zst` that
+    * leads with a dictionary frame, else null. */
+  def headDictionary(head: InputStream): Array[Byte] = {
+    val in = open(head)
+    try in match {
+      case z: ZstdFrames.FrameInputStream => z.dictionary
+      case _ => null
+    } finally in.close()
+  }
 
-  private def recordIterator(in: InputStream, gz: Option[GzipMemberInputStream],
-                             baseOffset: Long, keepContent: Boolean): Iterator[ParsedRecord] =
-    new Iterator[ParsedRecord] {
-      private var ordinal = 0L
-      private var nextRec = advance()
-
-      private def advance(): ParsedRecord = {
-        val startsAtBoundary = gz.exists(_.atMemberBoundary)
-        val memberStart = gz.map(_.nextByteOffset).getOrElse(-1L)
-        val r = readRecord(in, keepContent)
-        if (r == null) return null
-        val (mo, ms) = gz match {
-          case Some(g) if startsAtBoundary && g.atMemberBoundary && g.lastMemberEndOffset > memberStart =>
-            (baseOffset + memberStart, g.lastMemberEndOffset - memberStart)
-          case _ => (-1L, -1L)
-        }
-        ordinal += 1
-        r.copy(ordinal = ordinal - 1, memberOffset = mo, memberSize = ms)
-      }
-
-      override def hasNext: Boolean = nextRec != null
-      override def next(): ParsedRecord = {
-        val r = nextRec; nextRec = advance(); r
-      }
+  /** A plain file: every record is its own member, so every record end is a cut point. */
+  private final class PlainRecords(in: InputStream) extends InputStream with MemberBoundaries {
+    private var pos = 0L
+    def atMemberBoundary: Boolean = true
+    def lastMemberEndOffset: Long = pos
+    override def read(): Int = { val b = in.read(); if (b >= 0) pos += 1; b }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val n = in.read(b, off, len); if (n > 0) pos += n; n
     }
+    override def skip(n: Long): Long = { val s = in.skip(n); pos += s; s }
+    override def close(): Unit = in.close()
+  }
+
+  /** bzip2 / xz: one compressed stream with no member ends to cut at. */
+  private final class Unframed(in: InputStream)
+      extends java.io.FilterInputStream(new BufferedInputStream(in, 1 << 16)) with MemberBoundaries {
+    def atMemberBoundary: Boolean = false
+    def lastMemberEndOffset: Long = 0L
+  }
+
+  /**
+   * The one member walk (the reference's counting reader: coordinates,
+   * read.go:319-341, and mend's lastValidEndPos, mend.go:300-375): reads
+   * records off an [[open]]ed stream and tracks the cut points — member ends
+   * that are also record ends. A record that starts and ends at a cut point
+   * carries its compressed (offset, size), shifted by `baseOffset` when the
+   * stream is a byte range of a larger file; any other record — one of
+   * several in a member, or in bzip2/xz — carries (-1, -1). The scan, mend
+   * and the index builder all read through it.
+   */
+  final class MemberWalk(in: InputStream with MemberBoundaries, keepContent: Boolean,
+                         baseOffset: Long = 0L) {
+    private var cut = in.lastMemberEndOffset // past a zstd dictionary frame
+    private var atCut = in.atMemberBoundary
+    private var records = 0L
+    private var beforeCut = 0L
+
+    /** Compressed offset of the last cut point (the stream start before any). */
+    def lastCut: Long = cut
+
+    /** Records that end at or before [[lastCut]]. */
+    def recordsBeforeCut: Long = beforeCut
+
+    /** The next record, or null at a clean end of stream. */
+    def next(): ParsedRecord = {
+      val r = readRecord(in, keepContent)
+      if (r == null) return null
+      val startedAtCut = atCut
+      val start = cut
+      records += 1
+      atCut = in.atMemberBoundary
+      if (atCut) { cut = in.lastMemberEndOffset; beforeCut = records }
+      if (startedAtCut && atCut)
+        r.copy(ordinal = records - 1, memberOffset = baseOffset + start, memberSize = cut - start)
+      else r.copy(ordinal = records - 1)
+    }
+  }
+
+  /** Record iterator plus the decompressor that owns its native buffers —
+    * close it when done (the per-partition scan path does). `baseOffset` and
+    * `dict` describe a byte RANGE of a larger file (the member-index split
+    * path in WarcScan). */
+  def openRecords(raw: InputStream, baseOffset: Long = 0L, keepContent: Boolean = true,
+                  dict: Array[Byte] = null): (Iterator[ParsedRecord], java.io.Closeable) = {
+    val in = open(raw, dict)
+    val walk = new MemberWalk(in, keepContent, baseOffset)
+    (Iterator.continually(walk.next()).takeWhile(_ != null), in)
+  }
 
   /** Sidecar member index: one `offset size` line per gzip member or zstd
     * frame, written by WarcDataWriter next to each rotated `.warc.gz` /

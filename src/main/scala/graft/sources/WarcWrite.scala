@@ -72,7 +72,7 @@ class WarcWrite(path: String, info: LogicalWriteInfo, overwrite: Boolean) extend
   override def toBatch: BatchWrite = {
     val o = info.options
     val codec = o.getOrDefault("compression", "gzip").toLowerCase
-    WarcDataWriter.extOf(codec) // validate early, on the driver
+    WarcFileName.extOf(codec) // validate early, on the driver
     new WarcBatchWrite(
       path,
       info.schema(),
@@ -131,10 +131,7 @@ class WarcBatchWrite(dir: String, schema: StructType, prefix: String, tsCompact:
           if (st.isDirectory) truncate(st.getPath)
           else {
             val n = st.getPath.getName
-            val owned = n.endsWith(".warc") || n.endsWith(".warc.gz") ||
-              n.endsWith(".warc.zst") || n.endsWith(".warc.bz2") ||
-              n.endsWith(".warc.xz") || n.endsWith(".idx") // all scan-read exts
-            if (owned) fs.delete(st.getPath, false)
+            if (WarcFileName.isData(n) || WarcFileName.isIndex(n)) fs.delete(st.getPath, false)
           }
         }
       truncate(dirPath)
@@ -146,7 +143,7 @@ class WarcBatchWrite(dir: String, schema: StructType, prefix: String, tsCompact:
           "prefix/tsCompact per logical write, or mode(\"overwrite\"); " +
           "nothing was published")
     }
-    val (idxFiles, dataFiles) = all.partition(_.finalPath.endsWith(".idx"))
+    val (idxFiles, dataFiles) = all.partition(f => WarcFileName.isIndex(f.finalPath))
     (dataFiles ++ idxFiles).foreach { f =>
       val target = new HPath(f.finalPath)
       if (!fs.rename(new HPath(f.openPath), target))
@@ -161,7 +158,7 @@ class WarcBatchWrite(dir: String, schema: StructType, prefix: String, tsCompact:
     val dirPath = new HPath(dir)
     val fs = dirPath.getFileSystem(conf.value)
     if (fs.exists(dirPath)) fs.listStatus(dirPath).map(_.getPath)
-      .filter(_.getName.contains(s".open.$writeId-"))
+      .filter(p => WarcFileName.isAttemptOf(p.getName, writeId))
       .foreach(fs.delete(_, false))
   }
 }
@@ -193,7 +190,7 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
   private val fs = WarcDataWriter.rawFileSystem(dirPath, conf.value)
   fs.mkdirs(dirPath) // idempotent
 
-  private val ext = WarcDataWriter.extOf(codec)
+  private val ext = WarcFileName.extOf(codec)
   private val framed = codec != "none" // per-record members -> sidecar index
   private var fileIdx = 0
   private var written = 0
@@ -220,11 +217,11 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
   private def closeFile(): Unit = if (out != null) {
     out.close()
     if (framed) {
-      val idxOpen = new HPath(dirPath, finalPath.getName + s".idx.open.$attempt")
+      val idx = WarcFileName.idxOf(finalPath.getName)
+      val idxOpen = new HPath(dirPath, WarcFileName.stagedOf(idx, attempt))
       val s = fs.create(idxOpen, true)
       try WarcIO.writeMemberIndex(s, members.toSeq) finally s.close()
-      committed += WarcFileCommit(idxOpen.toString,
-        new HPath(dirPath, finalPath.getName + ".idx").toString)
+      committed += WarcFileCommit(idxOpen.toString, new HPath(dirPath, idx).toString)
       members.clear()
     }
     committed += WarcFileCommit(openPath.toString, finalPath.toString)
@@ -234,11 +231,11 @@ class WarcDataWriter(dir: String, schema: StructType, prefix: String, tsCompact:
   private def rollover(): Unit = {
     closeFile()
     val serial = partitionId * 100000 + fileIdx
-    val name = f"$prefix-$tsCompact-$serial%09d-$host.$ext"
+    val name = f"$prefix-$tsCompact-$serial%09d-$host$ext"
     finalPath = new HPath(dirPath, name)
     // attempt-unique working name: concurrent speculative attempts never
     // touch each other's bytes; only the committed attempt's files publish
-    openPath = new HPath(dirPath, name + s".open.$attempt")
+    openPath = new HPath(dirPath, WarcFileName.stagedOf(name, attempt))
     out = new WarcDataWriter.Counting(
       new BufferedOutputStream(fs.create(openPath, true), 1 << 16))
     fileIdx += 1
@@ -308,14 +305,6 @@ object WarcDataWriter {
       case c: ChecksumFileSystem => c.getRawFileSystem
       case other => other
     }
-
-  private[sources] def extOf(codec: String): String = codec match {
-    case "gzip" => "warc.gz"
-    case "zstd" => "warc.zst"
-    case "none" => "warc"
-    case other => throw new IllegalArgumentException(
-      s"unknown WARC compression '$other' (gzip | zstd | none)")
-  }
 
   /** warcinfo payload defaults (utils.go:196-199). */
   private[sources] def warcinfoFields(host: String): Seq[(String, String)] = Seq(

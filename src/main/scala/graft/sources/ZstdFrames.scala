@@ -3,187 +3,196 @@ package graft.sources
 import java.io.{EOFException, InputStream}
 import java.util.zip.ZipException
 
-import com.github.luben.zstd.Zstd
+import com.github.luben.zstd.{Zstd, ZstdDecompressCtx, ZstdException}
 
 /**
- * Streaming zstd FRAME walker: exact (offset, size) coordinates of every
- * frame in a `.warc.zst` stream, without decompressing — the zstd analog of
- * [[GzipMemberInputStream]]'s member bookkeeping, built on
- * `ZSTD_findFrameCompressedSize` (which parses block headers to the frame
- * end). Used by mend (find the last-valid cut of a crashed file) and by the
- * foreign-archive index builder (make an index-less `.warc.zst` splittable).
+ * The zstd side of the member walk: a `.warc.zst` decoded one FRAME at a
+ * time with exact compressed (offset, size) coordinates for every frame —
+ * the zstd analog of [[GzipMemberInputStream]]'s member bookkeeping. It is
+ * the only zstd read decoder in the engine: the scan, mend and the
+ * foreign-archive index builder all read `.warc.zst` through it (opened by
+ * [[WarcIO.open]]).
  *
- * Buffers at most ONE frame at a time (`maxFrameBytes` cap, default 256 MiB
- * — gowarc-framed files carry one record per frame, so frames are
+ * Frames are found with `ZSTD_findFrameCompressedSize` (block headers parsed
+ * to the frame end) over a read window with a cursor, and decoded straight
+ * out of that window by ONE decompression context per stream, the dictionary
+ * loaded once. Buffers at most ONE frame at a time, capped at 256 MiB —
+ * gowarc-framed files carry one record per frame, so frames are
  * record-sized; a foreign single-frame archive over the cap fails loudly
- * rather than exhausting task memory).
+ * rather than exhausting task memory.
  */
 object ZstdFrames {
 
-  /** One frame: exact compressed coordinates + the raw frame bytes. */
-  final case class Frame(offset: Long, size: Long, skippable: Boolean,
-                         bytes: Array[Byte])
-
-  def isDataMagic(b: Array[Byte]): Boolean =
-    b.length >= 4 && (b(0) & 0xff) == 0x28 && (b(1) & 0xff) == 0xb5 &&
-      (b(2) & 0xff) == 0x2f && (b(3) & 0xff) == 0xfd
-
-  def isSkippableMagic(b: Array[Byte]): Boolean =
-    b.length >= 4 && (b(0) & 0xf0) == 0x50 && (b(1) & 0xff) == 0x2a &&
-      (b(2) & 0xff) == 0x4d && (b(3) & 0xff) == 0x18
-
-  def frames(in: InputStream, maxFrameBytes: Int = 1 << 28): Iterator[Frame] =
-    new Iterator[Frame] {
-      private var buf = new Array[Byte](1 << 16)
-      private var len = 0 // valid bytes in buf(0..len)
-      private var off = 0L // absolute offset of buf(0)
-      private var eof = false
-      private var nextF: Frame = _
-
-      /** Grow the buffered window to >= min bytes; false when EOF caps it. */
-      private def fill(min: Int): Boolean = {
-        if (min > maxFrameBytes) throw new ZipException(
-          s"zstd frame at offset $off exceeds the $maxFrameBytes-byte walker cap")
-        if (buf.length < min) buf = java.util.Arrays.copyOf(buf, math.max(min, buf.length * 2))
-        while (len < min && !eof) {
-          val r = in.read(buf, len, buf.length - len)
-          if (r < 0) eof = true else len += r
-        }
-        len >= min
-      }
-
-      private def le32(at: Int): Long =
-        ((buf(at) & 0xffL)) | ((buf(at + 1) & 0xffL) << 8) |
-          ((buf(at + 2) & 0xffL) << 16) | ((buf(at + 3) & 0xffL) << 24)
-
-      private def emit(size: Long): Frame = {
-        if (!fill(size.toInt)) throw new EOFException(
-          s"zstd frame at offset $off truncated: need $size bytes, stream ended at ${off + len}")
-        val f = Frame(off, size, isSkippableMagic(buf),
-          java.util.Arrays.copyOfRange(buf, 0, size.toInt))
-        System.arraycopy(buf, size.toInt, buf, 0, len - size.toInt)
-        len -= size.toInt
-        off += size
-        f
-      }
-
-      // LAZY fetch: parsing frame k+1 must not happen before the caller has
-      // consumed frame k — a truncated tail frame throws from hasNext AFTER
-      // the last valid frame was delivered (mend depends on this ordering)
-      private var fetched = false
-
-      private def advance(): Unit = {
-        nextF = null
-        if (!fill(1)) return // clean EOF at a frame boundary
-        if (!fill(4)) throw new EOFException(s"zstd magic truncated at offset $off")
-        val head = java.util.Arrays.copyOfRange(buf, 0, 4)
-        if (isSkippableMagic(head)) {
-          if (!fill(8)) throw new EOFException(s"skippable frame header truncated at offset $off")
-          val size = 8L + le32(4)
-          // bound-check BEFORE the Int truncation in emit(): a corrupt
-          // 32-bit size field must fail as a clean cap error, not wrap
-          // negative (copyOfRange crash) or wrap small (silently wrong
-          // coordinates for every later frame)
-          if (size > maxFrameBytes) throw new ZipException(
-            s"zstd skippable frame at offset $off declares $size bytes, " +
-              s"over the $maxFrameBytes-byte walker cap")
-          nextF = emit(size)
-        } else if (isDataMagic(head)) {
-          // findFrameCompressedSize needs the WHOLE frame buffered (the
-          // wrapper THROWS ZstdException on an incomplete window) — widen
-          // the window and retry until EOF decides truncated-vs-complete
-          var size = -1L
-          while (size < 0) {
-            val r =
-              try Zstd.findFrameCompressedSize(buf.take(len))
-              catch {
-                case e: com.github.luben.zstd.ZstdException =>
-                  if (eof) throw new EOFException(
-                    s"zstd frame at offset $off truncated or corrupt: ${e.getMessage}")
-                  -1L // incomplete window: need more bytes
-              }
-            if (r > 0) size = r
-            else {
-              val target = math.min(math.max(len * 2L, len + (1L << 16)), maxFrameBytes.toLong).toInt
-              if (target <= len) throw new ZipException(
-                s"zstd frame at offset $off exceeds the $maxFrameBytes-byte walker cap")
-              fill(target)
-            }
-          }
-          nextF = emit(size)
-        } else throw new ZipException(
-          f"not a zstd frame at offset $off: magic ${head(0)}%02x${head(1)}%02x${head(2)}%02x${head(3)}%02x")
-      }
-
-      override def hasNext: Boolean = {
-        if (!fetched) { advance(); fetched = true }
-        nextF != null
-      }
-      override def next(): Frame = {
-        if (!fetched) advance()
-        fetched = false
-        val f = nextF
-        nextF = null
-        f
-      }
-    }
-
-  /** The decompressed records of a `.warc.zst`, one frame at a time, for
-    * mend: a leading skippable frame is the dictionary (read at
-    * construction, so [[lastMemberEndOffset]] starts past it), later
-    * skippable frames carry no bytes, and the next frame is walked only when
-    * the current one is drained — a truncated tail frame fails after every
-    * byte before it was returned. */
-  final class FrameInputStream(raw: InputStream) extends InputStream with MemberBoundaries {
-    private val it = frames(raw).buffered
-    private var buf = Array.emptyByteArray
+  /** The decompressed records of a `.warc.zst`, one frame at a time. A
+    * leading skippable frame is the dictionary (read at construction, so
+    * [[lastMemberEndOffset]] starts past it); a ranged read that starts past
+    * it passes the file's dictionary as `rangeDict` ([[WarcIO.headDictionary]]).
+    * Later skippable frames carry no bytes, and the next frame is walked only
+    * when the current one is drained — a truncated tail frame fails after
+    * every byte before it was returned. */
+  final class FrameInputStream(raw: InputStream, rangeDict: Array[Byte] = null)
+      extends InputStream with MemberBoundaries {
+    private val maxFrameBytes = 1 << 28
+    // compressed window: win(pos until lim) is buffered, win(0) sits at winOff
+    private var win = new Array[Byte](1 << 16)
     private var pos = 0
+    private var lim = 0
+    private var winOff = 0L
+    private var eof = false
+    // the current frame, decoded
+    private var out = new Array[Byte](1 << 16)
+    private var outPos = 0
+    private var outLen = 0
     private var prevEnd = 0L // end of the frame before the current one
     private var curEnd = 0L // end of the current frame
-    private val dict: Array[Byte] =
-      if (!it.hasNext || !it.head.skippable) null
-      else {
-        val f = it.next()
-        curEnd = f.offset + f.size
-        WarcIO.readZstdDictionaryFrame(new java.io.ByteArrayInputStream(f.bytes))
-      }
+    private val ctx = new ZstdDecompressCtx()
 
-    def atMemberBoundary: Boolean = pos == buf.length
+    /** The raw-content dictionary the frames decode against; null when none. */
+    val dictionary: Array[Byte] =
+      try {
+        val d =
+          if (fill(4) && skippableAt(pos)) {
+            val size = skippableSize()
+            val n = decode(pos + 8, size - 8)
+            step(size)
+            java.util.Arrays.copyOf(out, n)
+          } else rangeDict
+        if (d != null && d.nonEmpty) ctx.loadDict(d)
+        d
+      } catch { case e: Throwable => ctx.close(); throw e }
+
+    def atMemberBoundary: Boolean = outPos == outLen
     def lastMemberEndOffset: Long = if (atMemberBoundary) curEnd else prevEnd
+
+    /** Buffer at least `n` bytes at the cursor; false when the stream ends first. */
+    private def fill(n: Int): Boolean = {
+      if (lim - pos >= n) return true
+      if (pos > 0) { // slide the unread tail to the front: at most one partial frame
+        System.arraycopy(win, pos, win, 0, lim - pos)
+        winOff += pos; lim -= pos; pos = 0
+      }
+      if (win.length < n) win = java.util.Arrays.copyOf(win, math.max(n, win.length * 2))
+      while (lim < n && !eof) {
+        val r = raw.read(win, lim, win.length - lim)
+        if (r < 0) eof = true else lim += r
+      }
+      lim >= n
+    }
+
+    private def at: Long = winOff + pos
+
+    private def le32(i: Int): Long =
+      (win(i) & 0xffL) | ((win(i + 1) & 0xffL) << 8) |
+        ((win(i + 2) & 0xffL) << 16) | ((win(i + 3) & 0xffL) << 24)
+
+    private def skippableAt(i: Int): Boolean =
+      (win(i) & 0xf0) == 0x50 && win(i + 1) == 0x2a && win(i + 2) == 0x4d && win(i + 3) == 0x18
+
+    private def dataAt(i: Int): Boolean =
+      (win(i) & 0xff) == 0x28 && (win(i + 1) & 0xff) == 0xb5 &&
+        (win(i + 2) & 0xff) == 0x2f && (win(i + 3) & 0xff) == 0xfd
+
+    /** Size of the skippable frame at the cursor, buffered whole. */
+    private def skippableSize(): Int = {
+      if (!fill(8)) throw new EOFException(s"skippable frame header truncated at offset $at")
+      val size = 8L + le32(pos + 4)
+      // bound-check BEFORE the Int truncation: a corrupt 32-bit size field
+      // must fail as a clean cap error, not wrap
+      if (size > maxFrameBytes) throw new ZipException(
+        s"zstd skippable frame at offset $at declares $size bytes, " +
+          s"over the $maxFrameBytes-byte walker cap")
+      if (!fill(size.toInt)) throw new EOFException(
+        s"zstd frame at offset $at truncated: need $size bytes, stream ended at ${winOff + lim}")
+      size.toInt
+    }
+
+    /** Size of the data frame at the cursor, buffered whole: the size lookup
+      * needs the WHOLE frame in the window, so widen it until EOF decides
+      * truncated-vs-complete. */
+    private def dataSize(): Int = {
+      var size = -1L
+      while (size < 0) {
+        val r =
+          try Zstd.findFrameCompressedSize(win, pos, lim - pos)
+          catch { case _: ZstdException => -1L }
+        if (r > 0) size = r
+        else if (eof) throw new EOFException(s"zstd frame at offset $at truncated or corrupt")
+        else {
+          val avail = lim - pos
+          val target = math.min(math.max(avail * 2L, avail + (1L << 16)), maxFrameBytes.toLong).toInt
+          if (target <= avail) throw new ZipException(
+            s"zstd frame at offset $at exceeds the $maxFrameBytes-byte walker cap")
+          fill(target)
+        }
+      }
+      size.toInt
+    }
+
+    /** Decode the frame win(from until from+size) into `out`; returns its length.
+      * A frame that does not pledge its content size decodes into a growing
+      * buffer. Output is capped at zstd's largest expansion (a 4-byte RLE
+      * block per 128 KiB), so a corrupt size never allocates past it. */
+    private def decode(from: Int, size: Int): Int = {
+      val bound = math.min(size * 32768L, Int.MaxValue - 8L).toInt
+      val pledged = Zstd.getFrameContentSize(win, from, size)
+      def corrupt(why: String) =
+        new ZipException(s"corrupt zstd frame at offset ${winOff + from}: $why")
+      if (pledged > bound) throw corrupt(s"pledges $pledged bytes")
+      var cap = if (pledged >= 0) pledged.toInt else math.min(math.max(out.length, size * 4), bound)
+      var n = -1
+      while (n < 0) {
+        if (out.length < cap) out = new Array[Byte](cap)
+        try n = ctx.decompressByteArray(out, 0, cap, win, from, size)
+        catch {
+          case e: ZstdException if pledged < 0 && cap < bound &&
+              e.getErrorCode == Zstd.errDstSizeTooSmall() =>
+            cap = math.min(cap * 2L, bound).toInt
+          case e: ZstdException => throw corrupt(e.getMessage)
+        }
+      }
+      n
+    }
+
+    private def step(size: Int): Unit = {
+      pos += size
+      prevEnd = curEnd
+      curEnd = at
+    }
 
     /** Step to the next frame with bytes; false at the end of the file. */
     private def nextFrame(): Boolean = {
-      while (pos == buf.length) {
-        if (!it.hasNext) return false
-        val f = it.next()
-        prevEnd = curEnd
-        curEnd = f.offset + f.size
-        pos = 0
-        buf =
-          if (f.skippable) Array.emptyByteArray
-          else {
-            // stream-decompress: frames need not pledge their content size
-            val z = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(
-              new java.io.ByteArrayInputStream(f.bytes))
-            if (dict != null && dict.nonEmpty) z.setDict(dict)
-            try z.readAllBytes() finally z.close()
-          }
+      while (outPos == outLen) {
+        if (!fill(1)) return false // clean EOF at a frame boundary
+        if (!fill(4)) throw new EOFException(s"zstd magic truncated at offset $at")
+        outPos = 0
+        outLen = 0
+        if (skippableAt(pos)) step(skippableSize())
+        else if (dataAt(pos)) {
+          val size = dataSize()
+          outLen = decode(pos, size)
+          step(size)
+        } else throw new ZipException(
+          f"not a zstd frame at offset $at: magic ${win(pos)}%02x${win(pos + 1)}%02x" +
+            f"${win(pos + 2)}%02x${win(pos + 3)}%02x")
       }
       true
     }
 
     override def read(): Int =
-      if (!nextFrame()) -1 else { val b = buf(pos) & 0xff; pos += 1; b }
+      if (!nextFrame()) -1 else { val b = out(outPos) & 0xff; outPos += 1; b }
 
     override def read(b: Array[Byte], off: Int, len: Int): Int = {
       if (len == 0) return 0
       if (!nextFrame()) return -1
-      val n = math.min(len, buf.length - pos)
-      System.arraycopy(buf, pos, b, off, n)
-      pos += n
+      val n = math.min(len, outLen - outPos)
+      System.arraycopy(out, outPos, b, off, n)
+      outPos += n
       n
     }
 
-    override def close(): Unit = raw.close()
+    override def close(): Unit = {
+      ctx.close()
+      raw.close()
+    }
   }
 }

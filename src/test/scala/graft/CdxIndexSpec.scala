@@ -40,9 +40,16 @@ class CdxIndexSpec extends SparkSpec {
         col("id").cast("string")).cast("binary").as("content"))
   }
 
+  /** Decode one member slice: a gzip member or a (sized) zstd frame. */
+  private def inflate(slice: Array[Byte]): String = new String(
+    if (slice(0) == 0x1f.toByte) new GZIPInputStream(new java.io.ByteArrayInputStream(slice)).readAllBytes()
+    else com.github.luben.zstd.Zstd.decompress(slice,
+      com.github.luben.zstd.Zstd.getFrameContentSize(slice).toInt), "UTF-8")
+
   test("CDX lines: fields, sortedness, and random-access replay of every member") {
+   for (codec <- Seq("gzip", "zstd")) {
     val warcDir = Files.createTempDirectory("cdx-src").toString
-    writeWarc(responses(40), warcDir, "maxRecordsPerFile" -> 15)
+    writeWarc(responses(40), warcDir, "maxRecordsPerFile" -> 15, "compression" -> codec)
 
     val idx = graft.jobs.CdxIndex.lines(spark, warcDir).cache()
     val rows = idx.collect()
@@ -65,22 +72,21 @@ class CdxIndexSpec extends SparkSpec {
       assert(ks === ks.sorted)
     }
 
-    // RANDOM ACCESS: gunzip each indexed member slice, find its record inside
+    // RANDOM ACCESS: decode each indexed member slice, find its record inside
     rows.foreach { r =>
       val file = Files.list(Paths.get(warcDir)).filter(_.getFileName.toString == r.getAs[String]("filename"))
         .findFirst().orElseThrow()
       val off = r.getAs[String]("offset").toLong
       val len = r.getAs[String]("length").toLong
       val all = Files.readAllBytes(file)
-      assert(off + len <= all.length, "member slice out of file bounds")
-      val slice = java.util.Arrays.copyOfRange(all, off.toInt, (off + len).toInt)
-      val text = new String(new GZIPInputStream(
-        new java.io.ByteArrayInputStream(slice)).readAllBytes(), "UTF-8")
-      assert(text.startsWith("WARC/1.1\r\n"), "slice is not a record start")
+      assert(off + len <= all.length, s"$codec member slice out of file bounds")
+      val text = inflate(java.util.Arrays.copyOfRange(all, off.toInt, (off + len).toInt))
+      assert(text.startsWith("WARC/1.1\r\n"), s"$codec slice is not a record start")
       assert(text.contains(s"WARC-Target-URI: ${r.getAs[String]("original")}"),
-        s"member at $off does not hold ${r.getAs[String]("original")}")
+        s"$codec member at $off does not hold ${r.getAs[String]("original")}")
     }
     idx.unpersist()
+   }
   }
 
   test("merge: two crawls' indexes interleave sorted; exact duplicate captures collapse") {

@@ -4,6 +4,8 @@ import java.io.ByteArrayInputStream
 import java.io.ByteArrayOutputStream
 import java.util.zip.{CRC32, Deflater, ZipException}
 
+import scala.collection.mutable
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.GzipMemberInputStream
@@ -56,11 +58,22 @@ class GzipMemberSpec extends AnyFunSuite {
     bos.toByteArray
   }
 
-  private def readAll(in: GzipMemberInputStream): Array[Byte] = {
+  /** Drain `in`, recording into `members` every member's (offset, size) as
+    * the stream reports it: after each read, a drained boundary past the
+    * last recorded end closes a member. `chunk` sizes each read. */
+  private def readAll(in: GzipMemberInputStream,
+                      members: mutable.Buffer[(Long, Long)] = mutable.Buffer(),
+                      chunk: () => Int = () => 300): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](300) // small: exercises refill boundaries
-    var n = in.read(buf, 0, buf.length)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf, 0, buf.length) }
+    val buf = new Array[Byte](64 * 1024)
+    var n = 0
+    while (n >= 0) {
+      n = in.read(buf, 0, chunk())
+      if (n > 0) out.write(buf, 0, n)
+      val end = members.lastOption.map { case (o, s) => o + s }.getOrElse(0L)
+      if (in.atMemberBoundary && in.lastMemberEndOffset > end)
+        members += ((end, in.lastMemberEndOffset - end))
+    }
     out.toByteArray
   }
 
@@ -69,23 +82,24 @@ class GzipMemberSpec extends AnyFunSuite {
     val p2 = "payload-two".getBytes
     val m1 = memberWithOptionalFields(p1)
     val m2 = stdMember(p2)
-    val gz = new GzipMemberInputStream(new ByteArrayInputStream(m1 ++ m2), 1 << 16, trackMembers = true)
-    assert(readAll(gz) === p1 ++ p2)
-    assert(gz.members === Seq(gz.Member(0, m1.length), gz.Member(m1.length, m2.length)))
+    val gz = new GzipMemberInputStream(new ByteArrayInputStream(m1 ++ m2))
+    val ms = mutable.Buffer[(Long, Long)]()
+    assert(readAll(gz, ms) === p1 ++ p2)
+    assert(ms === Seq((0L, m1.length.toLong), (m1.length.toLong, m2.length.toLong)))
     assert(gz.atMemberBoundary && gz.lastMemberEndOffset === m1.length + m2.length)
   }
 
   test("a corrupted FHCRC fails loudly at the member's offset") {
     val m1 = stdMember("good first member".getBytes)
     val bad = memberWithOptionalFields("never reached".getBytes, corruptFhcrc = true)
-    val gz = new GzipMemberInputStream(new ByteArrayInputStream(m1 ++ bad), 1 << 16,
-      trackMembers = true)
-    val e = intercept[ZipException](readAll(gz))
+    val gz = new GzipMemberInputStream(new ByteArrayInputStream(m1 ++ bad))
+    val ms = mutable.Buffer[(Long, Long)]()
+    val e = intercept[ZipException](readAll(gz, ms))
     assert(e.getMessage.contains("FHCRC") && e.getMessage.contains(s"offset ${m1.length}"),
       e.getMessage)
     // the preceding member was fully verified: mend's cut point is intact
     assert(gz.lastMemberEndOffset === m1.length)
-    assert(gz.members === Seq(gz.Member(0, m1.length)))
+    assert(ms === Seq((0L, m1.length.toLong)))
   }
 
   test("a flipped byte inside a member fails loudly with the member offset") {
@@ -93,12 +107,13 @@ class GzipMemberSpec extends AnyFunSuite {
     val m2 = stdMember(Array.fill(4000)('b'.toByte))
     val bytes = m1 ++ m2
     bytes(m1.length + m2.length / 2) = (bytes(m1.length + m2.length / 2) ^ 0x55).toByte
-    val gz = new GzipMemberInputStream(new ByteArrayInputStream(bytes), 1 << 16, trackMembers = true)
-    val e = intercept[ZipException](readAll(gz))
+    val gz = new GzipMemberInputStream(new ByteArrayInputStream(bytes))
+    val ms = mutable.Buffer[(Long, Long)]()
+    val e = intercept[ZipException](readAll(gz, ms))
     assert(e.getMessage.contains(s"offset ${m1.length}"), e.getMessage)
     // member 1 was fully verified before the failure: the mend cut point
     assert(gz.lastMemberEndOffset === m1.length)
-    assert(gz.members === Seq(gz.Member(0, m1.length)))
+    assert(ms === Seq((0L, m1.length.toLong)))
   }
 
   test("a corrupted trailer CRC is detected even when the deflate data inflates") {
@@ -121,24 +136,18 @@ class GzipMemberSpec extends AnyFunSuite {
     val bos = new ByteArrayOutputStream()
     payloads.foreach(p => graft.sources.WarcIO.writeGzipMember(bos)(_.write(p)))
     val bytes = bos.toByteArray
-    val gz = new GzipMemberInputStream(new ByteArrayInputStream(bytes), 1 << 16, trackMembers = true)
+    val gz = new GzipMemberInputStream(new ByteArrayInputStream(bytes))
     // read with randomized chunk sizes to exercise refill boundaries
-    val got = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    var n = 0
-    while (n >= 0) {
-      n = gz.read(buf, 0, 1 + rnd.nextInt(buf.length))
-      if (n > 0) got.write(buf, 0, n)
-    }
-    assert(got.toByteArray === payloads.reduce(_ ++ _))
-    val ms = gz.members
+    val ms = mutable.Buffer[(Long, Long)]()
+    val got = readAll(gz, ms, () => 1 + rnd.nextInt(64 * 1024))
+    assert(got === payloads.reduce(_ ++ _))
     assert(ms.length === payloads.length)
-    assert(ms.head.offset === 0L)
-    ms.sliding(2).foreach {
-      case Seq(a, b) => assert(a.offset + a.size === b.offset)
+    assert(ms.head._1 === 0L)
+    ms.toSeq.sliding(2).foreach {
+      case Seq(a, b) => assert(a._1 + a._2 === b._1)
       case _ =>
     }
-    assert(ms.last.offset + ms.last.size === bytes.length)
+    assert(ms.last._1 + ms.last._2 === bytes.length)
   }
 
   test("truncation mid-member raises EOF; clean EOF at a boundary returns -1") {

@@ -238,6 +238,71 @@ class MendSpec extends SparkSpec {
     assert(!new java.io.File(dir).list().exists(_.endsWith(".crc")))
   }
 
+  /** A gzip file as the writer published it, plus its sidecar members. */
+  private def publishedGz(dir: String, n: Int): (java.nio.file.Path, Seq[(Long, Long)]) = {
+    writeFile(dir, n, gzip = true)
+    val p = Files.list(Paths.get(dir)).filter(_.toString.endsWith(".warc.gz")).findFirst().get
+    val idxIn = Files.newInputStream(Paths.get(p.toString + ".idx"))
+    (p, try graft.sources.WarcIO.readMemberIndex(idxIn) finally idxIn.close())
+  }
+
+  private val Attempt = "0f3c5a1e-7b2d-4c9a-8e61-2d4f9b0c7a13-17"
+
+  test("mendAll recovers a writer attempt file: truncated, published, sidecar installed") {
+    val dir = Files.createTempDirectory("mendattempt").toString
+    val (p, members) = publishedGz(dir, 6)
+    // a task that staged its file but never saw the driver's commit rename
+    val staged = Paths.get(s"$p.open.$Attempt")
+    val stagedIdx = Paths.get(s"$p.idx.open.$Attempt")
+    val validEnd = members(4)._1 + members(4)._2
+    Files.write(staged, java.util.Arrays.copyOf(Files.readAllBytes(p), (validEnd + 9).toInt))
+    Files.move(Paths.get(p.toString + ".idx"), stagedIdx)
+    Files.delete(p)
+
+    import spark.implicits._
+    val rows = Mend.mendAll(spark, dir).as[Mend.MendResult].collect()
+    assert(rows.map(_.file).toSeq === Seq(staged.toString))
+    val r = rows.head
+    assert(r.error != null && r.renamed && r.validRecords === 5 && r.keptBytes === validEnd)
+    assert(Files.size(p) === validEnd && !Files.exists(staged) && !Files.exists(stagedIdx))
+    val idxIn = Files.newInputStream(Paths.get(p.toString + ".idx"))
+    assert((try graft.sources.WarcIO.readMemberIndex(idxIn) finally idxIn.close()) ===
+      members.take(5))
+    assert(spark.read.format("graft.sources.WarcDataSource").load(dir).count() === 5)
+  }
+
+  test("a writer attempt whose <final> already exists lost the commit: error, nothing touched") {
+    val dir = Files.createTempDirectory("mendattemptlost").toString
+    val (p, _) = publishedGz(dir, 4)
+    val staged = Paths.get(s"$p.open.$Attempt")
+    val stagedIdx = Paths.get(s"$p.idx.open.$Attempt")
+    val bytes = Files.readAllBytes(p)
+    Files.write(staged, java.util.Arrays.copyOf(bytes, bytes.length - 5))
+    Files.copy(Paths.get(p.toString + ".idx"), stagedIdx)
+    val before = Seq(p, Paths.get(p.toString + ".idx"), staged, stagedIdx)
+      .map(f => f -> Files.readAllBytes(f))
+
+    val rows = Mend.mendAll(spark, dir).collect()
+    val lost = rows.find(_.getAs[String]("file") == staged.toString).get
+    assert(lost.getAs[String]("error").contains("already exists"))
+    assert(!lost.getAs[Boolean]("renamed") && lost.getAs[Long]("truncatedBytes") === 0L)
+    before.foreach { case (f, b) => assert(Files.readAllBytes(f) === b, s"$f was touched") }
+  }
+
+  test("mendAll reaches nested date=/host= directories, like the scan") {
+    val root = Files.createTempDirectory("mendnested")
+    val nested = Files.createDirectories(root.resolve("date=2023-11-14/host=a"))
+    val (p, members) = publishedGz(nested.toString, 5)
+    val open = Paths.get(p.toString + ".open")
+    val validEnd = members(3)._1 + members(3)._2
+    Files.write(open, java.util.Arrays.copyOf(Files.readAllBytes(p), (validEnd + 11).toInt))
+    Files.delete(p)
+    val rows = Mend.mendAll(spark, root.toString).collect()
+    assert(rows.length === 1 && rows.head.getAs[String]("file") === open.toString)
+    assert(rows.head.getAs[Boolean]("renamed") && rows.head.getAs[Long]("keptBytes") === validEnd)
+    assert(Files.size(p) === validEnd && !Files.exists(open))
+  }
+
   test("mendAll distributes across files (plain and gzip)") {
     val dir = Files.createTempDirectory("mendall").toString
     writeFile(dir, 4, gzip = false)

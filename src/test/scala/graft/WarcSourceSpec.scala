@@ -70,27 +70,36 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("member coordinates: reader-side tracking equals writer-side sidecar index") {
-    val dir = Files.createTempDirectory("warcidx").toString
-    writeWarc(sampleRows(30).coalesce(1), dir, "maxRecordsPerFile" -> 100)
-    val files = new java.io.File(dir).list().filter(_.endsWith(".warc.gz")).sorted
-    assert(files.length === 1)
-    val warc = s"$dir/${files.head}"
-    // two independent computations of the member layout (the reference's
-    // external-oracle pattern, read_test.go:345-401): the writer counted bytes
-    // while WRITING; the scan re-derives coordinates while INFLATING
-    val idxIn = Files.newInputStream(java.nio.file.Paths.get(warc + ".idx"))
-    val sidecar = try graft.sources.WarcIO.readMemberIndex(idxIn) finally idxIn.close()
-    assert(sidecar.length === 31) // 30 records + 1 warcinfo
-    val readBack = spark.read.format(Fmt).load(warc)
-      .select("member_offset", "member_size").orderBy("member_offset")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(readBack === sidecar)
-    assert(sidecar.head._1 === 0L)
-    sidecar.sliding(2).foreach {
-      case Seq(a, b) => assert(a._1 + a._2 === b._1) // contiguous, no gaps
-      case _ =>
+    val dict = java.util.Base64.getEncoder.encodeToString(
+      "WARC/1.1\r\nWARC-Type: response\r\nWARC-Target-URI: http://h0.example/p payload-"
+        .getBytes("UTF-8"))
+    for ((codec, opts) <- Seq(
+        "gzip" -> Seq("compression" -> "gzip"),
+        "zstd" -> Seq("compression" -> "zstd"),
+        "zstd+dict" -> Seq("compression" -> "zstd", "zstdDictBase64" -> dict))) {
+      val dir = Files.createTempDirectory("warcidx").toString
+      writeWarc(sampleRows(30).coalesce(1), dir, ("maxRecordsPerFile" -> 100) +: opts: _*)
+      val files = new java.io.File(dir).list().filter(_.matches(".*\\.warc\\.(gz|zst)")).sorted
+      assert(files.length === 1, codec)
+      val warc = s"$dir/${files.head}"
+      // two independent computations of the member layout (the reference's
+      // external-oracle pattern, read_test.go:345-401): the writer counted bytes
+      // while WRITING; the scan re-derives coordinates while DECODING
+      val idxIn = Files.newInputStream(java.nio.file.Paths.get(warc + ".idx"))
+      val sidecar = try graft.sources.WarcIO.readMemberIndex(idxIn) finally idxIn.close()
+      assert(sidecar.length === 31, codec) // 30 records + 1 warcinfo
+      val readBack = spark.read.format(Fmt).load(warc)
+        .select("member_offset", "member_size").orderBy("member_offset")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(readBack === sidecar, codec)
+      // members start at 0, or just past a leading dictionary frame
+      if (codec == "zstd+dict") assert(sidecar.head._1 > 8L) else assert(sidecar.head._1 === 0L)
+      sidecar.sliding(2).foreach {
+        case Seq(a, b) => assert(a._1 + a._2 === b._1, codec) // contiguous, no gaps
+        case _ =>
+      }
+      assert(sidecar.last._1 + sidecar.last._2 === new java.io.File(warc).length(), codec)
     }
-    assert(sidecar.last._1 + sidecar.last._2 === new java.io.File(warc).length())
   }
 
   test("member index splits the scan into member-aligned range partitions") {
@@ -133,6 +142,40 @@ class WarcSourceSpec extends SparkSpec {
     assert(split.orderBy("record_ordinal").collect() === baseline)
     // second run is a no-op (index present)
     assert(graft.jobs.IndexWarc.indexAll(spark, dir).count() === 0)
+  }
+
+  test("IndexWarc never splits inside a record that spans two gzip members") {
+    val dir = Files.createTempDirectory("warcspan")
+    def record(i: Int, content: Array[Byte]): Array[Byte] = {
+      val b = new java.io.ByteArrayOutputStream()
+      graft.sources.WarcIO.writeRecord(b, "WARC/1.1", Seq(
+        "WARC-Record-ID" -> s"<urn:uuid:s$i>", "WARC-Type" -> "resource",
+        "WARC-Target-URI" -> s"http://s.example/$i"), content)
+      b.toByteArray
+    }
+    val rnd = new scala.util.Random(7)
+    val out = Files.newOutputStream(dir.resolve("span.warc.gz"))
+    (0 until 40).foreach { i =>
+      val r = record(i, if (i == 20) Array.fill(4096)(rnd.nextInt(256).toByte)
+        else s"small-$i".getBytes("UTF-8"))
+      // a foreign writer's framing: record 20 is cut across two gzip members,
+      // the second one incompressible and larger than a split
+      if (i == 20) {
+        graft.sources.WarcIO.writeGzipMember(out)(_.write(r, 0, 200))
+        graft.sources.WarcIO.writeGzipMember(out)(_.write(r, 200, r.length - 200))
+      } else graft.sources.WarcIO.writeGzipMember(out)(_.write(r))
+    }
+    out.close()
+    val whole = spark.read.format(Fmt).load(dir.toString).orderBy("record_ordinal").collect()
+    assert(whole.length === 40)
+
+    val report = graft.jobs.IndexWarc.indexAll(spark, dir.toString).collect()
+    assert(report.head.getAs[String]("error") == null)
+    val split = spark.read.format(Fmt).option("maxPartitionBytes", "2048").load(dir.toString)
+    assert(split.rdd.getNumPartitions > 1)
+    assert(split.orderBy("record_ordinal").collect() === whole)
+    // one entry per cut point: the spanning record's two members share one
+    assert(report.head.getAs[Long]("members") === 40)
   }
 
   test("DSv2 write path: df.write -> commit-protocol publish -> scan round-trip") {

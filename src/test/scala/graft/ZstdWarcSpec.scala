@@ -8,8 +8,8 @@ import graft.sources.WarcIO
 
 /** K6/K7 + the S2 codec dispatch: zstd WARC with per-record SIZED frames and
   * the skippable dictionary frame (write.go:143-153, utils.go:42-73,
-  * read.go:358-535), plus foreign bzip2/xz archives read through the same
-  * magic sniffing. */
+  * read.go:358-535), plus foreign bzip2, xz and streaming-zstd archives read
+  * through the same magic sniffing. */
 class ZstdWarcSpec extends SparkSpec {
 
   private val Fmt = "graft.sources.WarcDataSource"
@@ -76,7 +76,7 @@ class ZstdWarcSpec extends SparkSpec {
       (bytes(2) & 0xff) === 0x4d && (bytes(3) & 0xff) === 0x18)
     // the embedded dictionary round-trips exactly
     val in = Files.newInputStream(Paths.get(dir, zst))
-    val dictBack = try WarcIO.readZstdDictionaryFrame(in) finally in.close()
+    val dictBack = WarcIO.headDictionary(in) // the ranged-read head probe
     assert(dictBack === Dict)
     // .idx members start AFTER the dictionary frame
     val idxIn = Files.newInputStream(Paths.get(dir, zst + ".idx"))
@@ -120,9 +120,16 @@ class ZstdWarcSpec extends SparkSpec {
         "WARC-Type" -> "resource",
         "WARC-Target-URI" -> s"http://f.example/$i"), s"foreign-$i".getBytes("UTF-8"))
     }
+    // one record larger than a decode buffer
+    WarcIO.writeRecord(plain, "WARC/1.1", Seq("WARC-Record-ID" -> "<urn:uuid:fbig>",
+      "WARC-Type" -> "resource"), Array.fill(200 * 1024)('x'.toByte))
     val raw = plain.toByteArray
 
     val dir = Files.createTempDirectory("warcforeigncodec")
+    // a streaming zstd writer: ONE frame that does not pledge its content size
+    val zs = new com.github.luben.zstd.ZstdOutputStreamNoFinalizer(
+      Files.newOutputStream(dir.resolve("c.warc.zst")))
+    try zs.write(raw) finally zs.close()
     val bz = new BZip2CompressorOutputStream(
       Files.newOutputStream(dir.resolve("a.warc.bz2")))
     try bz.write(raw) finally bz.close()
@@ -131,12 +138,14 @@ class ZstdWarcSpec extends SparkSpec {
     try xz.write(raw) finally xz.close()
 
     val back = spark.read.format(Fmt).load(dir.toString)
-    assert(back.count() === 50) // 25 records x 2 archives
-    assert(back.select("source_file").distinct().count() === 2)
+    assert(back.count() === 78) // 26 records x 3 archives
+    assert(back.select("source_file").distinct().count() === 3)
     assert(back.filter(col("warc_type") =!= "resource").count() === 0)
     val c = back.filter(col("record_id") === "<urn:uuid:f7>")
       .select(col("content").cast("string")).distinct().collect()
     assert(c.map(_.getString(0)).toSet === Set("foreign-7"))
+    assert(back.filter(col("record_id") === "<urn:uuid:fbig>")
+      .filter(length(col("content")) === 200 * 1024).count() === 3)
   }
 
   test("zstd mend: chopped mid-frame .open truncates at last valid frame; survivors scan") {
