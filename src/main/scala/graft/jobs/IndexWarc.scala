@@ -14,7 +14,7 @@ import graft.sources.{MemberBoundaries, SerializableHadoopConf, WarcDataWriter, 
  * (WarcDataSource packs indexed members into seekable range partitions).
  *
  * This is the Spark analog of the reference's offset bookkeeping purpose
- * (/root/reference/read.go:319-341): one pass of the member walk
+ * (read.go:319-341): one pass of the member walk
  * ([[WarcIO.MemberWalk]]) decodes every member and parses every record, and
  * writes one entry per cut point — a member end that is also a record end —
  * so a split never starts inside a record, and the sidecar persists them so

@@ -72,7 +72,7 @@ class WarcWrite(path: String, info: LogicalWriteInfo, overwrite: Boolean) extend
   override def toBatch: BatchWrite = {
     val o = info.options
     val codec = o.getOrDefault("compression", "gzip").toLowerCase
-    WarcFileName.extOf(codec) // validate early, on the driver
+    WarcFileName.extOf(codec) // validate early, before any task runs
     new WarcBatchWrite(
       path,
       info.schema(),

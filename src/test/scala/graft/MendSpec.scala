@@ -251,7 +251,7 @@ class MendSpec extends SparkSpec {
   test("mendAll recovers a writer attempt file: truncated, published, sidecar installed") {
     val dir = Files.createTempDirectory("mendattempt").toString
     val (p, members) = publishedGz(dir, 6)
-    // a task that staged its file but never saw the driver's commit rename
+    // a task that staged its file but never saw the job commit's rename
     val staged = Paths.get(s"$p.open.$Attempt")
     val stagedIdx = Paths.get(s"$p.idx.open.$Attempt")
     val validEnd = members(4)._1 + members(4)._2
