@@ -6,7 +6,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath, PositionedReadable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
@@ -253,6 +253,23 @@ private[sources] final class BoundedInputStream(in: InputStream, limit: Long)
   override def close(): Unit = in.close()
 }
 
+/** The file from offset 0 through positioned reads: the stream's own
+  * position is left where it is. Connectors may return short reads. */
+private[sources] final class HeadInputStream(in: PositionedReadable) extends InputStream {
+  private var pos = 0L
+  override def read(): Int = {
+    val b = new Array[Byte](1)
+    if (read(b, 0, 1) < 0) -1 else b(0) & 0xff
+  }
+  override def read(b: Array[Byte], off: Int, len: Int): Int = {
+    if (len == 0) return 0
+    var n = 0
+    while (n == 0) n = in.read(pos, b, off, len)
+    if (n > 0) pos += n
+    n
+  }
+}
+
 class WarcPartitionReader(part: WarcInputPartition, required: StructType,
                           filters: Array[Filter], conf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
@@ -264,13 +281,15 @@ class WarcPartitionReader(part: WarcInputPartition, required: StructType,
   private val fs = hfile.getFileSystem(conf.value)
   private val stream = fs.open(hfile)
 
-  private val (it, decompressor) = {
-    // a range past the file head may need the dictionary the head carries
-    val dict = if (part.start > 0) WarcIO.headDictionary(fs.open(hfile)) else null
-    if (part.start > 0) stream.seek(part.start)
-    WarcIO.openRecords(new BoundedInputStream(stream, part.length), part.start,
-      keepContent = required.fieldNames.contains("content"), dict)
-  }
+  private val (it, decompressor) =
+    try {
+      if (part.start > 0) stream.seek(part.start)
+      // a zstd range past the file head decodes against the dictionary the
+      // head carries, probed through positioned reads of the open stream
+      WarcIO.openRecords(new BoundedInputStream(stream, part.length), part.start,
+        keepContent = required.fieldNames.contains("content"),
+        dict = if (part.start > 0) ZstdFrames.headDictionary(new HeadInputStream(stream)) else null)
+    } catch { case e: Throwable => stream.close(); throw e }
   private var current: WarcIO.ParsedRecord = _
 
   private def fieldValue(rec: WarcIO.ParsedRecord, name: String): Any = name match {

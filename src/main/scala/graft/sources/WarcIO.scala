@@ -182,8 +182,9 @@ object WarcIO {
     * read.go:488-535; [[ZstdFrames.FrameInputStream]]), or plain records.
     * bzip2 and xz decompress as one stream that is never at a member
     * boundary. A ranged read of a dictionary-compressed `.warc.zst` starts
-    * past the dictionary frame and passes the file's dictionary as `dict`. */
-  def open(raw: InputStream, dict: Array[Byte] = null): InputStream with MemberBoundaries = {
+    * past the dictionary frame and passes the file's dictionary as `dict`
+    * ([[ZstdFrames.headDictionary]]), evaluated only when the range is zstd. */
+  def open(raw: InputStream, dict: => Array[Byte] = null): InputStream with MemberBoundaries = {
     val buf = new BufferedInputStream(raw, 1 << 16)
     buf.mark(6)
     val b = Array.fill(6)(buf.read())
@@ -193,21 +194,10 @@ object WarcIO {
     // any skippable frame 0x184D2A5x (read.go:428-429) leads with the dictionary
     else if (is(0x28, 0xb5, 0x2f, 0xfd) ||
         ((b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18))
-      new ZstdFrames.FrameInputStream(buf, dict)
+      ZstdFrames.FrameInputStream(buf, dict)
     else if (is('B', 'Z', 'h')) new Unframed(new BZip2CompressorInputStream(buf, true))
     else if (is(0xfd, '7', 'z', 'X', 'Z', 0x00)) new Unframed(new XZCompressorInputStream(buf, true))
     else new PlainRecords(buf)
-  }
-
-  /** The dictionary a ranged read needs, probed from the file head (`head`
-    * reads the file from offset 0): the dictionary of a `.warc.zst` that
-    * leads with a dictionary frame, else null. */
-  def headDictionary(head: InputStream): Array[Byte] = {
-    val in = open(head)
-    try in match {
-      case z: ZstdFrames.FrameInputStream => z.dictionary
-      case _ => null
-    } finally in.close()
   }
 
   /** A plain file: every record is its own member, so every record end is a cut point. */
@@ -273,7 +263,7 @@ object WarcIO {
     * `dict` describe a byte RANGE of a larger file (the member-index split
     * path in WarcScan). */
   def openRecords(raw: InputStream, baseOffset: Long = 0L, keepContent: Boolean = true,
-                  dict: Array[Byte] = null): (Iterator[ParsedRecord], java.io.Closeable) = {
+                  dict: => Array[Byte] = null): (Iterator[ParsedRecord], java.io.Closeable) = {
     val in = open(raw, dict)
     val walk = new MemberWalk(in, keepContent, baseOffset)
     (Iterator.continually(walk.next()).takeWhile(_ != null), in)

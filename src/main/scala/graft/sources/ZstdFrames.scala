@@ -1,189 +1,155 @@
 package graft.sources
 
-import java.io.{EOFException, InputStream}
+import java.io.{ByteArrayInputStream, EOFException, InputStream}
+import java.nio.ByteBuffer
 import java.util.zip.ZipException
 
-import com.github.luben.zstd.{Zstd, ZstdDecompressCtx, ZstdException}
+import com.github.luben.zstd.{ZstdDecompressCtx, ZstdException}
 
 /**
- * The zstd side of the member walk: a `.warc.zst` decoded one FRAME at a
- * time with exact compressed (offset, size) coordinates for every frame —
- * the zstd analog of [[GzipMemberInputStream]]'s member bookkeeping. It is
- * the only zstd read decoder in the engine: the scan, mend and the
- * foreign-archive index builder all read `.warc.zst` through it (opened by
- * [[WarcIO.open]]).
+ * The zstd side of the member walk: a `.warc.zst` decoded as one stream that
+ * reports every frame end with its exact compressed offset — the zstd analog
+ * of [[GzipMemberInputStream]]'s member bookkeeping. It is the only zstd read
+ * decoder in the engine: the scan, mend and the foreign-archive index builder
+ * all read `.warc.zst` through it (opened by [[WarcIO.open]]).
  *
- * Frames are found with `ZSTD_findFrameCompressedSize` (block headers parsed
- * to the frame end) over a read window with a cursor, and decoded straight
- * out of that window by ONE decompression context per stream, the dictionary
- * loaded once. Buffers at most ONE frame at a time, capped at 256 MiB —
- * gowarc-framed files carry one record per frame, so frames are
- * record-sized; a foreign single-frame archive over the cap fails loudly
- * rather than exhausting task memory.
+ * ONE decompression context per stream, the dictionary loaded once, streams
+ * every frame through a 64 KiB input and a 128 KiB output buffer; zstd's
+ * streaming decoder stops at each frame end, which is where the frame
+ * coordinates come from. Memory stays bounded whatever the frame size, so a
+ * foreign archive written as one frame (the `zstd` CLI, any streaming
+ * writer) reads like a gowarc-framed one with a record per frame.
  */
 object ZstdFrames {
 
-  /** The decompressed records of a `.warc.zst`, one frame at a time. A
-    * leading skippable frame is the dictionary (read at construction, so
-    * [[lastMemberEndOffset]] starts past it); a ranged read that starts past
-    * it passes the file's dictionary as `rangeDict` ([[WarcIO.headDictionary]]).
-    * Later skippable frames carry no bytes, and the next frame is walked only
-    * when the current one is drained — a truncated tail frame fails after
-    * every byte before it was returned. */
-  final class FrameInputStream(raw: InputStream, rangeDict: Array[Byte] = null)
+  private def le32(b: Array[Byte]): Long =
+    (b(0) & 0xffL) | ((b(1) & 0xffL) << 8) | ((b(2) & 0xffL) << 16) | ((b(3) & 0xffL) << 24)
+
+  /** Any skippable frame 0x184D2A5x at the file head carries the dictionary (read.go:428-429). */
+  private def skippable(b: Array[Byte]): Boolean =
+    (b(0) & 0xf0) == 0x50 && b(1) == 0x2a && b(2) == 0x4d && b(3) == 0x18
+
+  /** The leading skippable frame of `in` decoded as the raw-content
+    * dictionary (utils.go:42-73), with the frame's size; null, after reading
+    * 4 bytes, when `in` leads with anything else. */
+  private def dictionaryFrame(in: InputStream): (Array[Byte], Long) = {
+    val magic = in.readNBytes(4)
+    if (magic.length < 4 || !skippable(magic)) return null
+    val sizeField = in.readNBytes(4)
+    if (sizeField.length < 4) throw new EOFException("zstd dictionary frame header truncated")
+    val size = le32(sizeField)
+    if (size > Int.MaxValue - 8) throw new ZipException(s"zstd dictionary frame declares $size bytes")
+    // readNBytes grows its buffer as bytes arrive: a corrupt size allocates no more than the file holds
+    val payload = in.readNBytes(size.toInt)
+    if (payload.length < size) throw new EOFException(
+      s"zstd dictionary frame truncated: declares $size bytes, ${payload.length} present")
+    val d = new FrameInputStream(new ByteArrayInputStream(payload), null, 0L)
+    (try d.readAllBytes() finally d.close(), 8L + size)
+  }
+
+  /** The dictionary a ranged read of a `.warc.zst` needs, decoded from the
+    * leading dictionary frame of the file `head` reads from offset 0; null
+    * when the file has none. Reads no further than that frame — 4 bytes when
+    * there is none — and leaves `head` open. */
+  def headDictionary(head: InputStream): Array[Byte] = dictionaryFrame(head) match {
+    case null => null
+    case (d, _) => d
+  }
+
+  object FrameInputStream {
+    /** The decompressed records of a `.warc.zst` (`raw` must support mark).
+      * A leading skippable frame is the dictionary, read here so
+      * [[FrameInputStream.lastMemberEndOffset]] starts past it; a ranged read
+      * that starts past it passes the file's dictionary as `rangeDict`
+      * ([[headDictionary]]). */
+    def apply(raw: InputStream, rangeDict: Array[Byte]): FrameInputStream =
+      if (rangeDict != null) new FrameInputStream(raw, rangeDict, 0L)
+      else {
+        raw.mark(4)
+        dictionaryFrame(raw) match {
+          case null => raw.reset(); new FrameInputStream(raw, null, 0L)
+          case (d, size) => new FrameInputStream(raw, d, size)
+        }
+      }
+  }
+
+  /** Frames of `raw` decoded in order, starting at compressed offset
+    * `start`. Skippable frames past the head carry no bytes. A frame the file
+    * ends inside fails after every byte decoded before the cut was returned. */
+  final class FrameInputStream private[ZstdFrames] (raw: InputStream, dict: Array[Byte], start: Long)
       extends InputStream with MemberBoundaries {
-    private val maxFrameBytes = 1 << 28
-    // compressed window: win(pos until lim) is buffered, win(0) sits at winOff
-    private var win = new Array[Byte](1 << 16)
-    private var pos = 0
-    private var lim = 0
-    private var winOff = 0L
-    private var eof = false
-    // the current frame, decoded
-    private var out = new Array[Byte](1 << 16)
+    private val ctx = new ZstdDecompressCtx()
+    try if (dict != null && dict.nonEmpty) ctx.loadDict(dict)
+    catch { case e: Throwable => ctx.close(); throw e }
+    private val chunk = new Array[Byte](1 << 16)
+    private val src = ByteBuffer.allocateDirect(chunk.length).limit(0) // compressed, not yet decoded
+    private val dst = ByteBuffer.allocateDirect(1 << 17)
+    private var srcOff = start // compressed offset of src(0)
+    private val out = new Array[Byte](dst.capacity) // decoded, out(outPos until outLen) not yet returned
     private var outPos = 0
     private var outLen = 0
-    private var prevEnd = 0L // end of the frame before the current one
-    private var curEnd = 0L // end of the current frame
-    private val ctx = new ZstdDecompressCtx()
+    private var inFrame = false // the decoder is inside a frame it has not finished
+    private var prevEnd = start // end of the frame before the last finished one
+    private var curEnd = start // end of the last finished frame
 
-    /** The raw-content dictionary the frames decode against; null when none. */
-    val dictionary: Array[Byte] =
-      try {
-        val d =
-          if (fill(4) && skippableAt(pos)) {
-            val size = skippableSize()
-            val n = decode(pos + 8, size - 8)
-            step(size)
-            java.util.Arrays.copyOf(out, n)
-          } else rangeDict
-        if (d != null && d.nonEmpty) ctx.loadDict(d)
-        d
-      } catch { case e: Throwable => ctx.close(); throw e }
+    /** A frame's tail may decode to no bytes: finish it before answering. */
+    def atMemberBoundary: Boolean = {
+      while (outPos == outLen && inFrame) decode()
+      outPos == outLen && !inFrame
+    }
+    def lastMemberEndOffset: Long = if (!inFrame && outPos < outLen) prevEnd else curEnd
 
-    def atMemberBoundary: Boolean = outPos == outLen
-    def lastMemberEndOffset: Long = if (atMemberBoundary) curEnd else prevEnd
-
-    /** Buffer at least `n` bytes at the cursor; false when the stream ends first. */
-    private def fill(n: Int): Boolean = {
-      if (lim - pos >= n) return true
-      if (pos > 0) { // slide the unread tail to the front: at most one partial frame
-        System.arraycopy(win, pos, win, 0, lim - pos)
-        winOff += pos; lim -= pos; pos = 0
-      }
-      if (win.length < n) win = java.util.Arrays.copyOf(win, math.max(n, win.length * 2))
-      while (lim < n && !eof) {
-        val r = raw.read(win, lim, win.length - lim)
-        if (r < 0) eof = true else lim += r
-      }
-      lim >= n
+    /** More compressed bytes into the drained `src`; false at the end of the file. */
+    private def refill(): Boolean = {
+      srcOff += src.limit()
+      var n = 0
+      while (n == 0) n = raw.read(chunk)
+      src.clear()
+      if (n > 0) src.put(chunk, 0, n)
+      src.flip()
+      n > 0
     }
 
-    private def at: Long = winOff + pos
-
-    private def le32(i: Int): Long =
-      (win(i) & 0xffL) | ((win(i + 1) & 0xffL) << 8) |
-        ((win(i + 2) & 0xffL) << 16) | ((win(i + 3) & 0xffL) << 24)
-
-    private def skippableAt(i: Int): Boolean =
-      (win(i) & 0xf0) == 0x50 && win(i + 1) == 0x2a && win(i + 2) == 0x4d && win(i + 3) == 0x18
-
-    private def dataAt(i: Int): Boolean =
-      (win(i) & 0xff) == 0x28 && (win(i + 1) & 0xff) == 0xb5 &&
-        (win(i + 2) & 0xff) == 0x2f && (win(i + 3) & 0xff) == 0xfd
-
-    /** Size of the skippable frame at the cursor, buffered whole. */
-    private def skippableSize(): Int = {
-      if (!fill(8)) throw new EOFException(s"skippable frame header truncated at offset $at")
-      val size = 8L + le32(pos + 4)
-      // bound-check BEFORE the Int truncation: a corrupt 32-bit size field
-      // must fail as a clean cap error, not wrap
-      if (size > maxFrameBytes) throw new ZipException(
-        s"zstd skippable frame at offset $at declares $size bytes, " +
-          s"over the $maxFrameBytes-byte walker cap")
-      if (!fill(size.toInt)) throw new EOFException(
-        s"zstd frame at offset $at truncated: need $size bytes, stream ended at ${winOff + lim}")
-      size.toInt
-    }
-
-    /** Size of the data frame at the cursor, buffered whole: the size lookup
-      * needs the WHOLE frame in the window, so widen it until EOF decides
-      * truncated-vs-complete. */
-    private def dataSize(): Int = {
-      var size = -1L
-      while (size < 0) {
-        val r =
-          try Zstd.findFrameCompressedSize(win, pos, lim - pos)
-          catch { case _: ZstdException => -1L }
-        if (r > 0) size = r
-        else if (eof) throw new EOFException(s"zstd frame at offset $at truncated or corrupt")
-        else {
-          val avail = lim - pos
-          val target = math.min(math.max(avail * 2L, avail + (1L << 16)), maxFrameBytes.toLong).toInt
-          if (target <= avail) throw new ZipException(
-            s"zstd frame at offset $at exceeds the $maxFrameBytes-byte walker cap")
-          fill(target)
-        }
+    /** Decode until the decoder yields bytes or ends a frame; false at a
+      * clean end of file between frames. Called with `out` drained. */
+    private def decode(): Boolean = {
+      if (!inFrame && !src.hasRemaining && !refill()) return false
+      inFrame = true
+      dst.clear()
+      var done = false
+      while (!done && dst.position() == 0) {
+        done =
+          try ctx.decompressDirectByteBufferStream(dst, src)
+          catch { case e: ZstdException =>
+            throw new ZipException(s"corrupt zstd frame at offset $curEnd: ${e.getMessage}")
+          }
+        if (!done && dst.position() == 0 && !src.hasRemaining && !refill())
+          throw new EOFException(s"zstd frame at offset $curEnd truncated at ${srcOff + src.limit()}")
       }
-      size.toInt
-    }
-
-    /** Decode the frame win(from until from+size) into `out`; returns its length.
-      * A frame that does not pledge its content size decodes into a growing
-      * buffer. Output is capped at zstd's largest expansion (a 4-byte RLE
-      * block per 128 KiB), so a corrupt size never allocates past it. */
-    private def decode(from: Int, size: Int): Int = {
-      val bound = math.min(size * 32768L, Int.MaxValue - 8L).toInt
-      val pledged = Zstd.getFrameContentSize(win, from, size)
-      def corrupt(why: String) =
-        new ZipException(s"corrupt zstd frame at offset ${winOff + from}: $why")
-      if (pledged > bound) throw corrupt(s"pledges $pledged bytes")
-      var cap = if (pledged >= 0) pledged.toInt else math.min(math.max(out.length, size * 4), bound)
-      var n = -1
-      while (n < 0) {
-        if (out.length < cap) out = new Array[Byte](cap)
-        try n = ctx.decompressByteArray(out, 0, cap, win, from, size)
-        catch {
-          case e: ZstdException if pledged < 0 && cap < bound &&
-              e.getErrorCode == Zstd.errDstSizeTooSmall() =>
-            cap = math.min(cap * 2L, bound).toInt
-          case e: ZstdException => throw corrupt(e.getMessage)
-        }
+      if (done) {
+        inFrame = false
+        prevEnd = curEnd
+        curEnd = srcOff + src.position()
       }
-      n
+      dst.flip()
+      outPos = 0
+      outLen = dst.remaining()
+      dst.get(out, 0, outLen)
+      true
     }
 
-    private def step(size: Int): Unit = {
-      pos += size
-      prevEnd = curEnd
-      curEnd = at
-    }
-
-    /** Step to the next frame with bytes; false at the end of the file. */
-    private def nextFrame(): Boolean = {
-      while (outPos == outLen) {
-        if (!fill(1)) return false // clean EOF at a frame boundary
-        if (!fill(4)) throw new EOFException(s"zstd magic truncated at offset $at")
-        outPos = 0
-        outLen = 0
-        if (skippableAt(pos)) step(skippableSize())
-        else if (dataAt(pos)) {
-          val size = dataSize()
-          outLen = decode(pos, size)
-          step(size)
-        } else throw new ZipException(
-          f"not a zstd frame at offset $at: magic ${win(pos)}%02x${win(pos + 1)}%02x" +
-            f"${win(pos + 2)}%02x${win(pos + 3)}%02x")
-      }
+    /** Decoded bytes ready in `out`; false at a clean end of file. */
+    private def ready(): Boolean = {
+      while (outPos == outLen) if (!decode()) return false
       true
     }
 
     override def read(): Int =
-      if (!nextFrame()) -1 else { val b = out(outPos) & 0xff; outPos += 1; b }
+      if (!ready()) -1 else { val b = out(outPos) & 0xff; outPos += 1; b }
 
     override def read(b: Array[Byte], off: Int, len: Int): Int = {
       if (len == 0) return 0
-      if (!nextFrame()) return -1
+      if (!ready()) return -1
       val n = math.min(len, outLen - outPos)
       System.arraycopy(out, outPos, b, off, n)
       outPos += n

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.WarcIO
+import graft.sources.{WarcIO, ZstdFrames}
 
 /** K6/K7 + the S2 codec dispatch: zstd WARC with per-record SIZED frames and
   * the skippable dictionary frame (write.go:143-153, utils.go:42-73,
@@ -76,15 +76,15 @@ class ZstdWarcSpec extends SparkSpec {
       (bytes(2) & 0xff) === 0x4d && (bytes(3) & 0xff) === 0x18)
     // the embedded dictionary round-trips exactly
     val in = Files.newInputStream(Paths.get(dir, zst))
-    val dictBack = WarcIO.headDictionary(in) // the ranged-read head probe
+    val dictBack = try ZstdFrames.headDictionary(in) finally in.close() // the ranged-read head probe
     assert(dictBack === Dict)
     // .idx members start AFTER the dictionary frame
     val idxIn = Files.newInputStream(Paths.get(dir, zst + ".idx"))
     val members = try WarcIO.readMemberIndex(idxIn) finally idxIn.close()
     assert(members.head._1 > 8L)
 
-    // whole-file scan (in-stream dict sniff) and ranged scan (head probe +
-    // setDict) agree record-for-record
+    // whole-file scan (in-stream dict sniff) and ranged scan (head probe)
+    // agree record-for-record
     val whole = spark.read.format(Fmt).load(dir)
     assert(whole.filter(col("warc_type") =!= "warcinfo").count() === 150)
     val split = spark.read.format(Fmt).option("maxPartitionBytes", "2048").load(dir)
@@ -146,6 +146,63 @@ class ZstdWarcSpec extends SparkSpec {
     assert(c.map(_.getString(0)).toSet === Set("foreign-7"))
     assert(back.filter(col("record_id") === "<urn:uuid:fbig>")
       .filter(length(col("content")) === 200 * 1024).count() === 3)
+  }
+
+  test("a one-frame .warc.zst streams: bounded read-ahead, every record scans") {
+    // a streaming writer's archive: ONE frame holding 2,000 records (8 MiB
+    // decoded); random hex content keeps it several MiB compressed
+    val rnd = new scala.util.Random(7)
+    val dir = Files.createTempDirectory("warczoneframe")
+    val file = dir.resolve("one.warc.zst")
+    val zs = new com.github.luben.zstd.ZstdOutputStreamNoFinalizer(Files.newOutputStream(file))
+    try (0 until 2000).foreach { i =>
+      WarcIO.writeRecord(zs, "WARC/1.1", Seq("WARC-Record-ID" -> s"<urn:uuid:o$i>",
+        "WARC-Type" -> "resource"), Array.fill(4096)("0123456789abcdef".charAt(rnd.nextInt(16)).toByte))
+    } finally zs.close()
+    val size = Files.size(file)
+    assert(size > (2L << 20), s"compressed to $size bytes")
+
+    // the first record arrives after a bounded prefix of the frame is read
+    var consumed = 0L
+    val counting = new java.io.FilterInputStream(Files.newInputStream(file)) {
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        val n = super.read(b, off, len)
+        if (n > 0) consumed += n
+        n
+      }
+    }
+    val in = WarcIO.open(counting)
+    try {
+      val walk = new WarcIO.MemberWalk(in, keepContent = true)
+      val first = walk.next()
+      assert(first.headers("warc-record-id") === "<urn:uuid:o0>" && first.content.length === 4096)
+      assert(consumed <= (256L << 10), s"read $consumed compressed bytes for the first record")
+      var n = 1
+      while (walk.next() != null) n += 1
+      assert(n === 2000)
+      assert(walk.lastCut === size && walk.recordsBeforeCut === 2000) // the frame ends the file
+    } finally in.close()
+
+    val back = spark.read.format(Fmt).load(dir.toString)
+    assert(back.count() === 2000)
+    assert(back.filter(length(col("content")) =!= 4096).count() === 0)
+  }
+
+  test("a skippable frame between data frames carries no bytes") {
+    val ctx = WarcIO.zstdCompressCtx(3, null)
+    def frame(i: Int): Array[Byte] = {
+      val b = new java.io.ByteArrayOutputStream()
+      WarcIO.writeZstdMember(b, ctx)(WarcIO.writeRecord(_, "WARC/1.1",
+        Seq("WARC-Type" -> "resource"), s"r$i".getBytes("UTF-8")))
+      b.toByteArray
+    }
+    val (f0, f1) = try (frame(0), frame(1)) finally ctx.close()
+    val skip = Array[Byte](0x50, 0x2a, 0x4d, 0x18, 4, 0, 0, 0, 1, 2, 3, 4)
+    val (it, c) = WarcIO.openRecords(new java.io.ByteArrayInputStream(f0 ++ skip ++ f1))
+    val recs = try it.toList finally c.close()
+    assert(recs.map(r => new String(r.content, "UTF-8")) === List("r0", "r1"))
+    assert(recs.map(r => (r.memberOffset, r.memberSize)) ===
+      List((0L, f0.length.toLong), (f0.length.toLong, (skip.length + f1.length).toLong)))
   }
 
   test("zstd mend: chopped mid-frame .open truncates at last valid frame; survivors scan") {
